@@ -120,7 +120,8 @@ def _cpu_counters() -> tuple[int, int] | None:
         with open("/proc/stat") as fh:
             parts = fh.readline().split()
         vals = [int(x) for x in parts[1:]]
-        return vals[7] if len(vals) > 7 else 0, sum(vals)
+        # guest/guest_nice (fields 9-10) are already inside user/nice
+        return vals[7] if len(vals) > 7 else 0, sum(vals[:8])
     except (OSError, ValueError, IndexError):
         return None
 

@@ -125,9 +125,3 @@ def load_fixture_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
         if os.path.exists(path):
             cat.register(name, _read_parquet(spark, path))
     return cat
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience: {name: DataFrame} for the fixture tables."""
-    cat = load_fixture_catalog(spark, sf_dir)
-    return {name: cat.table(name) for name in cat.names()}

@@ -37,15 +37,6 @@ def char_count(col: Column) -> Column:
     return F.length(col)
 
 
-def avg_token_len(col: Column) -> Column:
-    """Mean token length; integer sum / integer count → double."""
-    toks = tokens(col)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda acc, x: acc + x
-    )
-    return total / F.size(toks)
-
-
 def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
     sw = stopwords or EN_STOPWORDS
     toks = tokens(col)
@@ -56,19 +47,6 @@ def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
 def punct_count(col: Column) -> Column:
     """Number of punctuation characters (fixed class)."""
     return F.length(F.regexp_replace(col, r"[^.,;:!?]", ""))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite document-quality heuristic in [0, 1]: token volume,
-    stopword ratio, average word length. Deterministic double
-    arithmetic (same expression tree in the oracle)."""
-    n_tok = token_count(col).cast("double")
-    return F.round(
-        F.least(F.lit(1.0), n_tok / F.lit(50.0)) * 0.4
-        + stopword_ratio(col) * 0.3
-        + F.least(F.lit(1.0), avg_token_len(col) / F.lit(8.0)) * 0.3,
-        6,
-    )
 
 
 def lang_guess(col: Column) -> Column:
@@ -292,13 +270,6 @@ def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams straight from a text column. Convenience
-    form; hot paths should project :func:`tokens` first and use
-    :func:`shingles_of_tokens` (see its interpreted-lambda note)."""
-    return shingles_of_tokens(tokens(col), n)
 
 
 def shingle_arrays(

@@ -1458,18 +1458,20 @@ def _semantic_dedup_variants(
     # exchange carries the pairs. Past the threshold (the 100 TB
     # regime) the hash-partitioned shuffle join below is the right
     # plan and remains byte-identical in output; pair multisets are
-    # unordered either way (the rollup is the only consumer).
-    st = m.select(
-        F.count(F.lit(1)).alias("n"), F.max(F.size("q")).alias("d")
-    ).first()
-    est_bytes = (
-        (st.n or 0) * ((st.d or 0) * 8 + 64) * max(1, len(variants))
-    )
+    # unordered either way (the rollup is the only consumer). The size
+    # probe is an eager job, so it runs only when broadcast is enabled.
     bthr = _auto_broadcast_bytes(vecs.sparkSession)
-    if 0 < est_bytes <= bthr:
-        par = vecs.sparkSession.sparkContext.defaultParallelism
-        a = a.repartition(par)
-        b = F.broadcast(b)
+    if bthr > 0:
+        st = m.select(
+            F.count(F.lit(1)).alias("n"), F.max(F.size("q")).alias("d")
+        ).first()
+        est_bytes = (
+            (st.n or 0) * ((st.d or 0) * 8 + 64) * max(1, len(variants))
+        )
+        if 0 < est_bytes <= bthr:
+            par = vecs.sparkSession.sparkContext.defaultParallelism
+            a = a.repartition(par)
+            b = F.broadcast(b)
     dot = F.aggregate(
         F.zip_with("qa", "qb", lambda x, y: x * y),
         F.lit(0).cast("long"),

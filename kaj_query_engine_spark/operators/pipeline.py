@@ -618,13 +618,6 @@ def _grams_expr(text_col: str) -> Column:
     return F.concat(toks, big)
 
 
-def gram_arrays(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, grams) — see :func:`_grams_expr`."""
-    return df.select(
-        F.col(id_col).alias("id"), _grams_expr(text_col).alias("grams")
-    )
-
-
 def _gram_bucket(g: Column, n_buckets: int) -> Column:
     """Feature-hash a gram to [0, n_buckets): 60-bit md5 prefix mod B
     — the engine-portable hash (DuckDB:

@@ -66,10 +66,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def hyperplane_signs(
     planes: int = LSH_PLANES, dim: int = EMB_DIM, seed: int = LSH_SEED
 ) -> list[list[float]]:

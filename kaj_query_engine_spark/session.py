@@ -22,53 +22,8 @@ Design-for-scale notes (local[N] is the test harness, not the target):
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from pyspark.sql import SparkSession
-
-_VENDORED_PROTOBUF = (
-    Path(__file__).resolve().parent.parent / "third_party" / "protobuf"
-)
-
-
-def _export_vendored_protobuf():
-    """Put the vendored pure-python protobuf on PYTHONPATH — but ONLY
-    when the environment has none installed — so Spark's python
-    WORKERS can import it (their interpreter also auto-imports the
-    shim's ``sitecustomize``, which relaxes the gencode/runtime
-    known-skew gate; see third_party/protobuf/README.md). Must run
-    BEFORE the first SparkSession: workers inherit the JVM's
-    environment, which is captured at gateway launch.
-
-    Returns True when the vendor dir was (or already is) exported.
-
-    The mutation is deliberately process-wide and NOT restored after
-    gateway launch: transformWithState's driver-side state-protocol
-    worker is spawned with the CURRENT process environment at query
-    start (restoring PYTHONPATH post-launch crashes it — measured),
-    and lazily-forked python daemons need it too. The side effect on
-    unrelated child processes — the vendor's ``sitecustomize.py``
-    would shadow a real one (only the first on sys.path loads) — is
-    defused inside the shim itself: it CHAINS to the next
-    sitecustomize it finds on sys.path after patching (see
-    third_party/protobuf/sitecustomize.py).
-    """
-    try:
-        import google.protobuf  # noqa: F401
-
-        return False  # a real install exists; never shadow it
-    except ImportError:
-        pass
-    vendor = str(_VENDORED_PROTOBUF)
-    if not (_VENDORED_PROTOBUF / "google" / "protobuf").is_dir():
-        return False
-    prior = os.environ.get("PYTHONPATH")
-    if vendor in (prior or "").split(os.pathsep):
-        return True  # already exported (e.g. by a wrapper script)
-    os.environ["PYTHONPATH"] = (
-        f"{prior}{os.pathsep}{vendor}" if prior else vendor
-    )
-    return True
 
 
 def get_spark(
@@ -88,9 +43,6 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-
-    vendor_exported = _export_vendored_protobuf()
-    pre_existing = SparkSession.getActiveSession()
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -121,32 +73,8 @@ def get_spark(
         # groups of the fact table that a BHJ threshold can't touch
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     )
-    if vendor_exported:
-        # cluster-mode executors don't inherit the driver process env:
-        # ship the vendored dir to them explicitly (harmless no-op in
-        # local mode, where workers fork from the driver-env JVM)
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if vendor_exported and pre_existing is not None:
-        # the EXECUTOR-side python daemons capture their env from the
-        # JVM at gateway launch: an export landing after that reaches
-        # the driver-side TWS worker but not the executors' — warn
-        # instead of letting a streaming worker die on a raw
-        # ModuleNotFoundError mid-query
-        import warnings
-
-        warnings.warn(
-            "vendored protobuf was exported AFTER the Spark gateway "
-            "launched (a SparkSession already existed): "
-            "transformWithStateInPandas executor workers may not see "
-            "it and can fail with ModuleNotFoundError. Create the "
-            "session via get_spark() first, or install protobuf.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     spark.sparkContext.setLogLevel("WARN")
     return spark

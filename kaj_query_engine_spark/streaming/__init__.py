@@ -6,7 +6,6 @@ from kaj_query_engine_spark.streaming.ops import (
     run_available_now_all,
     stream_session_stats,
     stream_stateful_user_totals,
-    stream_stateful_user_totals_tws,
     stream_static_enrich,
     stream_tumbling_agg,
     streaming_dedup,
@@ -21,7 +20,6 @@ __all__ = [
     "run_available_now_all",
     "stream_session_stats",
     "stream_stateful_user_totals",
-    "stream_stateful_user_totals_tws",
     "stream_tumbling_agg",
     "streaming_dedup",
 ]

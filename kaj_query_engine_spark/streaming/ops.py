@@ -18,9 +18,9 @@ incremental execution model:
   entry per key within the watermark horizon, not the full history.
 - **custom stateful operator**: ``applyInPandasWithState`` — per-key
   mutable state across micro-batches with Arrow-batched transfer
-  (running totals here; the same shape carries CEP/session machines) —
-  plus the same operator on Spark 4's ``transformWithStateInPandas``
-  successor API (named state variables, timers, RocksDB-backed).
+  (running totals here; the same shape carries CEP/session machines).
+  It is the engine's one Python-stateful path: it needs no package
+  beyond pyspark and runs on either state store provider.
 
 Determinism note for the correctness gate: every pipeline here runs
 with ``trigger(availableNow=True)`` over a single fixture file — one
@@ -108,8 +108,8 @@ def state_partitions_for_keys(
     [4, parallelism]. Pure so the rule itself is unit-testable.
 
     ``python_stateful`` raises the floor to parallelism/2: for
-    applyInPandasWithState / transformWithStateInPandas the partition
-    count is also the number of CONCURRENT PYTHON WORKERS, and the
+    applyInPandasWithState the partition count is also the number of
+    CONCURRENT PYTHON WORKERS, and the
     per-partition state-store overhead the low floor optimizes for is
     dwarfed by Python compute — measured on the user-totals shape at
     sf0.1 (local[32], warm): 4 partitions 2.33 s, 8 → 1.73 s,
@@ -555,135 +555,6 @@ def stream_stateful_user_totals(
         stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _ensure_protobuf() -> None:
-    """Driver-side protobuf for the TWS state protocol: a real install
-    if present, else the vendored pure-python runtime with the
-    gencode/runtime minor-skew gate relaxed (the worker-side half of
-    this is ``third_party/protobuf/sitecustomize.py`` — see its
-    README). Raises NotImplementedError when neither exists."""
-    import sys
-    from pathlib import Path
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return  # real install: never touch its version validation
-    except ImportError as exc:
-        vendor = (
-            Path(__file__).resolve().parents[2] / "third_party" / "protobuf"
-        )
-        if not (vendor / "google" / "protobuf").is_dir():
-            raise NotImplementedError(
-                "transformWithStateInPandas needs the protobuf package "
-                "for Spark's state-protocol workers; neither an install "
-                "nor the vendored copy (third_party/protobuf) is "
-                "available. Use stream_stateful_user_totals (GroupState "
-                "protocol) instead."
-            ) from exc
-        if str(vendor) not in sys.path:
-            sys.path.insert(0, str(vendor))
-    # vendored runtime only: relax the gencode/runtime gate for the
-    # ONE verified-safe skew (6.33.x gencode on the 6.32.0 vendored
-    # runtime — same domain/major/suffix, exactly one minor ahead);
-    # any other mismatch re-raises so an unanticipated upgrade fails
-    # loudly. Keep in lockstep with the worker-side twin,
-    # third_party/protobuf/sitecustomize.py.
-    from google.protobuf import runtime_version as _rv
-
-    _orig = _rv.ValidateProtobufRuntimeVersion
-
-    def _known_safe_skew(gen_domain, gen_major, gen_minor, gen_patch,
-                         gen_suffix):
-        return (
-            gen_domain == _rv.DOMAIN
-            and gen_major == _rv.MAJOR
-            # released gencode ('' suffix) on the vendored runtime,
-            # which self-identifies as 6.32.0-dev
-            and gen_suffix in ("", _rv.SUFFIX)
-            and (gen_minor, gen_patch) >= (_rv.MINOR, _rv.PATCH)
-            and gen_minor - _rv.MINOR <= 1
-        )
-
-    def _lenient(gen_domain, gen_major, gen_minor, gen_patch, gen_suffix,
-                 location):
-        try:
-            _orig(gen_domain, gen_major, gen_minor, gen_patch, gen_suffix,
-                  location)
-        except _rv.VersionError:
-            if not _known_safe_skew(gen_domain, gen_major, gen_minor,
-                                    gen_patch, gen_suffix):
-                raise
-
-    if getattr(_rv.ValidateProtobufRuntimeVersion, "__name__", "") != "_lenient":
-        _rv.ValidateProtobufRuntimeVersion = _lenient
-
-
-def stream_stateful_user_totals_tws(
-    sdf: DataFrame, key_col: str = "user_id", value_col: str = "value"
-) -> DataFrame:
-    """Same running totals as :func:`stream_stateful_user_totals`, on
-    Spark 4's ``transformWithStateInPandas`` — the successor stateful
-    API (SPARK-46815): named state variables on a processor handle
-    (value/list/map state, timers, TTL) instead of one opaque state
-    tuple, so an operator can evolve its state schema and register
-    per-key timers for CEP-style timeouts.
-
-    Requires (a) the RocksDB state store provider (the only provider
-    that backs transformWithState) — callers set
-    ``spark.sql.streaming.stateStore.providerClass`` to
-    ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
-    before starting the query — and (b) the ``protobuf`` package,
-    which Spark's TWS state-protocol workers import
-    (``google.protobuf``). This container ships no protobuf install,
-    but the repo VENDORS the pure-python runtime
-    (``third_party/protobuf`` — session.get_spark exports it to the
-    workers' PYTHONPATH when no real install exists), so the operator
-    runs for real here; it raises ``NotImplementedError`` only when
-    neither an install nor the vendored copy is available.
-    :func:`stream_stateful_user_totals` (GroupState protocol, no
-    protobuf) remains the oracle-checked default; this operator is
-    pinned byte-equal to it in tests. Accumulation semantics are
-    identical: exact integer micro-units, HALF_UP to 2 decimals at
-    emit.
-    """
-    _ensure_protobuf()
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType.fromDDL(f"{key_col} long, n_events long, sum_v double")
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, micros long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, micros = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                # per-item quantization to micros == CAST(v AS
-                # DECIMAL(18,6)) HALF_UP — same as the GroupState twin
-                scaled = pdf[value_col].to_numpy(dtype="float64") * 1_000_000.0
-                q = np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)
-                micros += int(q.astype("int64").sum())
-            self._state.update((n, micros))
-            cents = (abs(micros) + 5_000) // 10_000 * (1 if micros >= 0 else -1)
-            yield pd.DataFrame(
-                {key_col: [key[0]], "n_events": [n], "sum_v": [cents / 100.0]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(key_col).transformWithStateInPandas(
-        _Totals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

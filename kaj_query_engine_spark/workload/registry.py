@@ -71,89 +71,74 @@ def register(
 # set — an under-maintained hand list FAILS pytest instead of
 # silently starving a changed query of its external check.
 #
-# Round 15 pins (second optimization round; derive_fine-verified as
-# changes land — the rotation pytest enforces the superset): the
-# round's optimization targets per VERDICT.md's "Next round" list.
-# q55/q66 are ALSO semantic couples of sources/versioned.py (round-14
-# verdict #3: they pin whenever versioned.py changes, enforced via
-# tools/changed_queries._SEMANTIC_COUPLES) and lead the stalest tier
-# below regardless, so they are in the window either way.
+# Pins since round 15 (derive_fine output; the rotation pytest
+# enforces the superset). Most are conservative neighbour pins: a
+# deleted helper's hunk is attributed to the symbol at its splice
+# point, and a docstring edit pins its whole module.
 _CHANGED_THIS_ROUND = [
-    "q12_semantic_dedup",  # Lloyd tail-job trim (skip unused final
-    # centroid update), rollup chain collapse
-    "q91_kmeans_int",  # shares kmeans_assign_int with q12
-    "q19_bucket_evolution",  # commit-protocol job batching
-    "q33_table_time_travel",  # commit-protocol job batching
-    "q55_merge_upsert",  # versioned.py semantic couple (verdict #3)
-    "q66_merge_evolve",  # versioned.py semantic couple (verdict #3)
-    "q67_incremental_join",  # IVM branch fusion (shared delta scan)
-    "q63_ann_ivf",  # probe-branch fusion over one index scan
-    "q85_stream_merge",  # VersionedTable / streaming riders
-    "q86_stream_scd2",
-    "q87_stream_agg_state",
-    "q89_stream_join_view",
-    "q80_stream_windows",  # streaming/ops riders (overlap work)
-    "q81_stream_late_data",
+    "q12_semantic_dedup",  # size probe skipped when broadcast is off
+    "q80_stream_windows",  # streaming/ops: transformWithState twin
+    "q81_stream_late_data",  # removed, docstrings updated
     "q82_stream_dedup",
     "q83_stream_stateful_totals",
     "q84_stream_stream_join",
-    "q93_codec_decode",  # settle-or-revert of f9311d0 (verdict #2)
-]
-
-# Stalest-first (RULE 2): the 31 queries OUTSIDE round 14's 50-query
-# window (PERF_r14.json queries_dropped — their last driver row is
-# round 13). q55/q66 lead deliberately: neither got a driver oracle
-# row in round 14 despite riding the changed commit_keyed path
-# (round-14 verdict #3). 18 changed + 31 stale − overlap(5: q55, q66,
-# q63, q67, and none else) = 44 window slots used; the remaining 6
-# fall to the next-stalest tier (r14-checked veterans, registration
-# order), keeping the window a full 50.
-_STALEST = [
-    "q55_merge_upsert",
-    "q66_merge_evolve",
-    "q00_flagship_revenue",
-    "q01_scan",
+    "q85_stream_merge",
+    "q86_stream_scd2",
+    "q87_stream_agg_state",
+    "q89_stream_join_view",
+    "q90_media_pipeline",
+    "q01_scan",  # catalog: load_tables deleted after load_fixture_catalog
     "q02_select_distinct_orderby",
     "q03_agg_witness",
     "q07_join4",
     "q10_theta_join",
-    "q11_groupby_having",
-    "q13_join_variants",
-    "q23_limit_topk",
-    "q24_scalar_string_math",
-    "q25_date_case",
-    "q27_grouped_analytics",
-    "q29_pivot",
-    "q30_count_distinct",
-    "q32_format_roundtrips",
-    "q34_text_etl_sink",
-    "q35_partition_pruning",
-    "q36_bucketed_join",
-    "q37_salted_agg",
-    "q44_incremental_agg",
-    "q57_scd2_incremental",
-    "q58_constraint_audit",
-    "q59_pit_join",
-    "q60_ann_brute_force",
-    "q61_ann_lsh",
+    "q61_ann_lsh",  # similarity: cosine deleted before hyperplane_signs
     "q62_embedding_neardup",
-    "q65_hybrid_retrieval",
-    "q67_incremental_join",
-    "q88_incremental_distinct",
-    # ---- next-stalest tier: r14-checked veterans filling the free
-    # ---- slots (all equally 1-round-stale; registration order)
-    "q16_cross_join",
-    "q17_window_funcs",
-    "q40_text_stats",
+    "q40_text_stats",  # pipeline: gram_arrays deleted; workload/text doc
     "q43_temperature_mix",
-    "q45_sketch_aggregates",
+    "q21_html_extract",  # workload/text module docstring
+    "q41_bpe_tokenizer",
+    "q46_profile_topk",  # functions/text: quality_score/avg_token_len
+    "q48_decontaminate",  # functions/text: word_shingles deleted
+    "q52_ngram_jaccard",
+]
+
+# Stalest-first (RULE 2): the 31 queries OUTSIDE round 15's 50-query
+# window (CORRECTNESS_r15.json — all last checked in round 14, so
+# registration order). 25 changed + 31 stale − 6 overlap (q21, q41,
+# q46, q48, q52, q90) = 50 window slots used, 0 free.
+_STALEST = [
     "q18_shortest_paths",
-    "q64_pagerank",
-    "q71_bfs_reach",
-    "q90_media_pipeline",
     "q20_set_ops",
     "q21_html_extract",
+    "q38_percentiles",
+    "q39_partitioned_merge",
+    "q41_bpe_tokenizer",
+    "q42_group_sample",
+    "q45_sketch_aggregates",
     "q46_profile_topk",
+    "q47_training_mix",
+    "q48_decontaminate",
+    "q49_doc_chunks",
+    "q50_dedup_exact",
+    "q51_minhash_lsh",
+    "q52_ngram_jaccard",
+    "q53_simhash",
+    "q54_dedup_clusters",
+    "q64_pagerank",
+    "q68_span_dedup",
+    "q69_span_decontaminate",
+    "q70_windows",
+    "q71_bfs_reach",
+    "q72_sessionize",
+    "q73_asof_join",
+    "q74_range_join",
+    "q75_time_rollup",
+    "q76_json_props",
+    "q77_rolling_window",
+    "q78_funnel",
+    "q79_retention_cohorts",
+    "q90_media_pipeline",
 ]
 
 _VERIFY_PRIORITY = _CHANGED_THIS_ROUND + [

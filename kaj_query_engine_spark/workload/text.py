@@ -4,7 +4,7 @@ extensions; no reference counterpart).
 
 Oracle notes: ratios are raw int/int doubles (bit-identical across
 engines — a single IEEE division), so no rounding is applied except
-where the operator contract itself rounds (quality_score).
+to q40's composite quality score, which both sides round to 6 places.
 """
 
 from __future__ import annotations

@@ -1272,6 +1272,57 @@ def test_semantic_dedup_injected_assignment_and_pair_cap(spark):
     assert sum(r.dropped for r in base.values()) >= 1
 
 
+def test_semantic_dedup_skips_size_probe_when_broadcast_disabled(spark):
+    """With autoBroadcastJoinThreshold <= 0 the pair join can never be
+    broadcast, so building the plan must not run the eager member-size
+    probe: zero Spark jobs at build time (an injected assignment keeps
+    k-means' own collects out of the count). The rollup is the same
+    as under the session's default threshold, which does broadcast."""
+    import time
+
+    rows = [
+        (i, [0.3 * ((i * 13 + d * 7) % 11 - 5) / 5 for d in range(8)])
+        for i in range(60)
+    ]
+    rows += [(100 + i, list(rows[i][1])) for i in range(6)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    assigned = spark.createDataFrame(
+        [(r[0], r[0] % 4) for r in rows], "id long, j long"
+    )
+    kwargs = dict(assigned=assigned, thr_num=999, thr_den=1000)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    sc, prev, group = spark.sparkContext, spark.conf.get(key), "sd-build"
+    cached: list = []
+    spark.conf.set(key, "-1")
+    try:
+        sc.setJobGroup(group, "semantic_dedup plan build")
+        plan = D.semantic_dedup(
+            df, "vec_id", "embedding", cache_registry=cached, **kwargs
+        )
+        # sentinel: once its job is visible, every earlier job of the
+        # group is too (the listener bus delivers events in order)
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup(group):
+            assert time.monotonic() < deadline, "sentinel job never seen"
+            time.sleep(0.05)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        off = sorted(plan.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(key, prev)
+    on = sorted(
+        D.semantic_dedup(
+            df, "vec_id", "embedding", cache_registry=cached, **kwargs
+        ).collect()
+    )
+    for frame in cached:
+        frame.unpersist()
+    assert off == on
+    assert sum(r.dropped for r in on) >= 1
+
+
 def test_semantic_dedup_matches_numpy_model(spark):
     """Differential pin beyond the SQL oracle: semantic_dedup's whole
     pipeline (integer Lloyd clustering + quantized integer cosine

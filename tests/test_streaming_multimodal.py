@@ -133,67 +133,6 @@ def media(spark):
     return M.attach_fake_media(df)
 
 
-def test_stateful_totals_tws_matches_group_state_twin(spark):
-    """transformWithStateInPandas (Spark 4 successor API) must produce
-    byte-identical totals to the applyInPandasWithState operator.
-    Needs the RocksDB state store provider — the only one that backs
-    transformWithState — and the protobuf package for Spark's TWS
-    state-protocol workers. The repo's vendored pure-python runtime
-    (third_party/protobuf, exported to worker PYTHONPATH by
-    session.get_spark) makes this runnable even here, where no
-    protobuf is installed — this equality assertion is exactly what
-    keeps the vendored version-skew shim honest."""
-    from kaj_query_engine_spark.streaming import stream_stateful_user_totals_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(key)
-    spark.conf.set(key, rocks)
-    try:
-        s = read_stream_table(spark, SF_DIR, "events")
-        tws = run_available_now(
-            stream_stateful_user_totals_tws(s), "update", state_partitions=4
-        ).collect()
-    finally:
-        spark.conf.set(key, prev)
-    s = read_stream_table(spark, SF_DIR, "events")
-    legacy = run_available_now(
-        stream_stateful_user_totals(s), "update", state_partitions=4
-    ).collect()
-    as_set = lambda rows: {(r.user_id, r.n_events, r.sum_v) for r in rows}
-    assert as_set(tws) == as_set(legacy)
-    assert len(tws) > 0
-
-
-def test_stateful_totals_tws_guard_without_protobuf(spark, monkeypatch):
-    """When NEITHER a protobuf install NOR the vendored copy exists,
-    the TWS operator must fail fast with a clear NotImplementedError
-    naming the GroupState fallback — not crash a streaming worker
-    mid-query. Simulated by pointing the guard's vendor probe at a
-    nonexistent path and hiding any already-imported protobuf."""
-    import sys
-    from pathlib import Path
-
-    from kaj_query_engine_spark.streaming import ops as OPS
-
-    vendor = str(Path(OPS.__file__).resolve().parents[2] / "third_party" / "protobuf")
-    orig_is_dir = Path.is_dir
-    monkeypatch.setattr(
-        Path,
-        "is_dir",
-        lambda self: False if "third_party" in str(self) else orig_is_dir(self),
-    )
-    for mod in [m for m in sys.modules if m == "google" or m.startswith("google.")]:
-        monkeypatch.delitem(sys.modules, mod, raising=False)
-    monkeypatch.setattr(sys, "path", [p for p in sys.path if p != vendor])
-    s = read_stream_table(spark, SF_DIR, "events")
-    with pytest.raises(NotImplementedError, match="stream_stateful_user_totals"):
-        OPS.stream_stateful_user_totals_tws(s)
-
-
 def test_state_partition_sizing_rule(spark):
     """state_partitions derives from observed key cardinality (round-5
     verdict item 5): pure rule pinned at the measured break points,
@@ -282,33 +221,6 @@ def test_auto_state_partitions_memoizes_file_sources(spark, tmp_path, monkeypatc
     S.auto_state_partitions(mem, F.col("k"))
     S.auto_state_partitions(mem, F.col("k"))
     assert calls["n"] == 6
-
-
-def test_lenient_protobuf_gate_only_accepts_known_skew():
-    """The relaxed gencode/runtime gate must swallow ONLY the verified
-    one-minor skew (6.33.x gencode on the 6.32.0 vendored runtime) and
-    re-raise everything else — a major-version gap or a two-minor jump
-    after some future upgrade has to fail loudly, not silently pass."""
-    from kaj_query_engine_spark.streaming import ops as OPS
-
-    OPS._ensure_protobuf()
-    from google.protobuf import runtime_version as rv
-
-    ok = rv.ValidateProtobufRuntimeVersion
-    assert getattr(ok, "__name__", "") == "_lenient"  # vendored path active
-    # the verified skew: gencode one minor ahead — swallowed
-    ok(rv.DOMAIN, rv.MAJOR, rv.MINOR + 1, 0, rv.SUFFIX, "tws.proto")
-    # exact match — trivially fine
-    ok(rv.DOMAIN, rv.MAJOR, rv.MINOR, rv.PATCH, rv.SUFFIX, "tws.proto")
-    # two minors ahead — re-raised
-    with pytest.raises(rv.VersionError):
-        ok(rv.DOMAIN, rv.MAJOR, rv.MINOR + 2, 0, rv.SUFFIX, "tws.proto")
-    # newer major — re-raised
-    with pytest.raises(rv.VersionError):
-        ok(rv.DOMAIN, rv.MAJOR + 1, 0, 0, rv.SUFFIX, "tws.proto")
-    # suffix mismatch — re-raised
-    with pytest.raises(rv.VersionError):
-        ok(rv.DOMAIN, rv.MAJOR, rv.MINOR + 1, 0, "-rc1", "tws.proto")
 
 
 def test_stream_static_enrich_equals_batch_join(spark):
