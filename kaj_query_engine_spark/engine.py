@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -14,6 +15,10 @@ from kaj_query_engine_spark.catalog import Catalog, load_fixture_catalog
 from kaj_query_engine_spark.dialect.lowering import lower
 from kaj_query_engine_spark.dialect.parser import parse
 from kaj_query_engine_spark.plans.pprint import pprint_query
+
+# Query texts whose prepared DataFrame ``KajEngine.sql`` keeps. Small:
+# each entry pins its shuffle files and broadcast relations until evicted.
+_PLAN_CACHE_SIZE = 16
 
 
 class KajEngine:
@@ -30,18 +35,36 @@ class KajEngine:
         self.catalog = Catalog(spark)
         self.strict_compat = strict_compat
         self._stats_cache: dict[str, object] = {}
+        self._plans: OrderedDict[str, DataFrame] = OrderedDict()
 
     def register(self, name: str, df: DataFrame) -> None:
         self.catalog.register(name, df)
+        self._plans.clear()
+        self._stats_cache.clear()
 
     def load_fixtures(self, sf_dir: str) -> None:
         fixture_cat = load_fixture_catalog(self.spark, sf_dir)
         for name in fixture_cat.names():
-            self.catalog.register(name, fixture_cat.table(name))
+            self.register(name, fixture_cat.table(name))
 
     def sql(self, query_text: str) -> DataFrame:
-        """Dialect SQL → DataFrame (lazy; caller acts on it)."""
-        return lower(parse(query_text), self.catalog, self.strict_compat)
+        """Dialect SQL → DataFrame (lazy; caller acts on it).
+
+        The same text returns the same DataFrame until the next
+        ``register``/``load_fixtures`` (least recently used texts are
+        dropped beyond ``_PLAN_CACHE_SIZE``), so collecting a repeat
+        reuses its plan, broadcasts and shuffle stages. An entry is
+        planned under the SQL conf in force at its first call. A
+        registered table is treated as immutable: re-register it to
+        pick up new data.
+        """
+        df = self._plans.pop(query_text, None)
+        if df is None:
+            df = lower(parse(query_text), self.catalog, self.strict_compat)
+        self._plans[query_text] = df
+        if len(self._plans) > _PLAN_CACHE_SIZE:
+            self._plans.popitem(last=False)
+        return df
 
     def explain_plan(self, query_text: str) -> str:
         """Logical-plan pretty-print in the spirit of the reference's

@@ -4,8 +4,10 @@
 
 from __future__ import annotations
 
+import itertools
 import os
 import random
+import time
 
 import pytest
 
@@ -19,6 +21,37 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     spark = get_spark("kaj-tests", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group and return
+    ``(fn's result, number of Spark jobs it started)``.
+
+    The status tracker fills asynchronously, so a sentinel job runs
+    afterwards under a group of its own: once the tracker shows it,
+    every earlier job is visible too (the listener bus delivers events
+    in order)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, "counted")
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup(f"{group}-sentinel", "sentinel")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never seen"
+        time.sleep(0.05)
+    return result, len(tracker.getJobIdsForGroup(group))
 
 
 def _rand_rows(seed: int, spec, n: int):

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from kaj_query_engine_spark.operators import dedup as D
 from kaj_query_engine_spark.operators import similarity as S
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 @pytest.fixture()
@@ -1278,8 +1278,6 @@ def test_semantic_dedup_skips_size_probe_when_broadcast_disabled(spark):
     probe: zero Spark jobs at build time (an injected assignment keeps
     k-means' own collects out of the count). The rollup is the same
     as under the session's default threshold, which does broadcast."""
-    import time
-
     rows = [
         (i, [0.3 * ((i * 13 + d * 7) % 11 - 5) / 5 for d in range(8)])
         for i in range(60)
@@ -1291,26 +1289,19 @@ def test_semantic_dedup_skips_size_probe_when_broadcast_disabled(spark):
     )
     kwargs = dict(assigned=assigned, thr_num=999, thr_den=1000)
     key = "spark.sql.autoBroadcastJoinThreshold"
-    sc, prev, group = spark.sparkContext, spark.conf.get(key), "sd-build"
+    prev = spark.conf.get(key)
     cached: list = []
     spark.conf.set(key, "-1")
     try:
-        sc.setJobGroup(group, "semantic_dedup plan build")
-        plan = D.semantic_dedup(
-            df, "vec_id", "embedding", cache_registry=cached, **kwargs
+        plan, build_jobs = count_jobs(
+            spark,
+            lambda: D.semantic_dedup(
+                df, "vec_id", "embedding", cache_registry=cached, **kwargs
+            ),
         )
-        # sentinel: once its job is visible, every earlier job of the
-        # group is too (the listener bus delivers events in order)
-        sc.parallelize([0], 1).count()
-        deadline = time.monotonic() + 30
-        while not sc.statusTracker().getJobIdsForGroup(group):
-            assert time.monotonic() < deadline, "sentinel job never seen"
-            time.sleep(0.05)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert build_jobs == 0
         off = sorted(plan.collect())
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         spark.conf.set(key, prev)
     on = sorted(
         D.semantic_dedup(

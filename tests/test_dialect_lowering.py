@@ -8,8 +8,8 @@ get dedicated cases.
 
 import pytest
 
-from kaj_query_engine_spark.engine import KajEngine
-from tests.conftest import assert_same_result
+from kaj_query_engine_spark.engine import _PLAN_CACHE_SIZE, KajEngine
+from tests.conftest import SF_DIR, assert_same_result, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -317,3 +317,57 @@ def test_strict_compat_skips_unresolvable_orderby_keys(spark, ref_tables, duck):
             "SELECT customer_ref.cid FROM customer_ref "
             "ORDERBY customer_ref.lastname"
         )
+
+
+@pytest.fixture
+def fresh_engine(spark, ref_tables):
+    eng = KajEngine(spark)
+    for name, (df, _rows, _cols) in ref_tables.items():
+        eng.register(name, df)
+    return eng
+
+
+JOIN_TEXT = "SELECT * FROM customer_ref,cart_ref WHERE customer_ref.cid=cart_ref.cid"
+
+
+def test_repeated_text_reuses_prepared_dataframe(spark, fresh_engine):
+    """A repeated text returns the same DataFrame, whose executed plan
+    already holds the broadcast build: collecting it again runs only
+    the final job."""
+    assert fresh_engine.sql(JOIN_TEXT) is fresh_engine.sql(JOIN_TEXT)
+    first, first_jobs = count_jobs(spark, fresh_engine.sql(JOIN_TEXT).collect)
+    again, again_jobs = count_jobs(spark, fresh_engine.sql(JOIN_TEXT).collect)
+    assert sorted(again) == sorted(first)
+    assert again_jobs == 1
+    assert first_jobs >= 2
+
+
+def test_repeated_text_sees_reregistered_table(spark, fresh_engine):
+    text = "SELECT customer_ref.cid FROM customer_ref"
+    assert len(fresh_engine.sql(text).collect()) == 150
+    fresh_engine.register(
+        "customer_ref",
+        spark.createDataFrame(
+            [(7, 0, "a", "b", "c")],
+            "cid int, gender int, firstname string, lastname string, address string",
+        ),
+    )
+    assert [tuple(r) for r in fresh_engine.sql(text).collect()] == [(7,)]
+
+
+def test_load_fixtures_drops_prepared_queries(fresh_engine):
+    df = fresh_engine.sql(JOIN_TEXT)
+    fresh_engine.load_fixtures(SF_DIR)
+    assert fresh_engine.sql(JOIN_TEXT) is not df
+
+
+def test_prepared_queries_evict_least_recently_used(fresh_engine):
+    texts = [
+        f'SELECT customer_ref.cid FROM customer_ref WHERE customer_ref.cid>"{i}"'
+        for i in range(_PLAN_CACHE_SIZE + 1)
+    ]
+    first = {t: fresh_engine.sql(t) for t in texts[:-1]}
+    fresh_engine.sql(texts[0])  # now the most recently used
+    fresh_engine.sql(texts[-1])  # one past the cap: evicts texts[1]
+    assert fresh_engine.sql(texts[0]) is first[texts[0]]
+    assert fresh_engine.sql(texts[1]) is not first[texts[1]]

@@ -99,6 +99,18 @@ def test_engine_explain_cost_end_to_end(spark, ref_tables):
     assert "customer_ref" in eng._stats_cache
 
 
+def test_explain_cost_sees_reregistered_table(spark):
+    """Re-registering a name drops its cached stats: the cost is priced
+    with the new table's row count, not the old one's."""
+    eng = KajEngine(spark)
+    q = "SELECT t.a FROM t"
+    eng.register("t", spark.createDataFrame([(i,) for i in range(10)], "a long"))
+    assert "Scan(t): 10 rows" in eng.explain_cost(q)
+    eng.register("t", spark.createDataFrame([(i,) for i in range(30)], "a long"))
+    out = eng.explain_cost(q)
+    assert "Scan(t): 30 rows" in out and "~30 rows" in out
+
+
 def test_collect_stats_counts(spark):
     df = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "a long, b long"
