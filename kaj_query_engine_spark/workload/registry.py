@@ -101,12 +101,13 @@ _CHANGED_THIS_ROUND = [
     "q46_profile_topk",  # functions/text: quality_score/avg_token_len
     "q48_decontaminate",  # functions/text: word_shingles deleted
     "q52_ngram_jaccard",
+    "q54_dedup_clusters",  # dedup: partition-local union-find clustering
 ]
 
 # Stalest-first (RULE 2): the 31 queries OUTSIDE round 15's 50-query
 # window (CORRECTNESS_r15.json — all last checked in round 14, so
-# registration order). 25 changed + 31 stale − 6 overlap (q21, q41,
-# q46, q48, q52, q90) = 50 window slots used, 0 free.
+# registration order). 26 changed + 31 stale − 7 overlap (q21, q41,
+# q46, q48, q52, q54, q90) = 50 window slots used, 0 free.
 _STALEST = [
     "q18_shortest_paths",
     "q20_set_ops",

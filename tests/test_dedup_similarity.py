@@ -957,6 +957,121 @@ def test_cluster_duplicates_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}
 
 
+def _union_find_clusters(edges):
+    """{node: min id of its component} by a plain Python union-find."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _crosses_partitions(pairs) -> bool:
+    """True when some component's edges sit in different partitions
+    under different local minima — the case cluster_duplicates can
+    only finish with distributed label rounds."""
+    roots: dict = {}
+    for part in pairs.rdd.glom().collect():
+        for v, r in _union_find_clusters([(p.d1, p.d2) for p in part]).items():
+            roots.setdefault(v, set()).add(r)
+    return any(len(rs) > 1 for rs in roots.values())
+
+
+def _clusters(pairs, **kw):
+    return {r.id: r.cluster for r in D.cluster_duplicates(pairs, **kw).collect()}
+
+
+def test_cluster_duplicates_single_partition_batch_runs_3_jobs(spark):
+    """A curation batch's verified pairs sit in one partition, so the
+    partition-local union-find finishes every component and no label
+    round runs: contraction shuffle, checkpoint and the cross-edge
+    emptiness check are the only jobs."""
+    edges = [(10 * i, 10 * i + 3) for i in range(30)]
+    pairs = spark.createDataFrame(edges, "d1 long, d2 long").coalesce(1)
+    out, jobs = count_jobs(spark, lambda: D.cluster_duplicates(pairs))
+    assert jobs <= 3
+    assert {r.id: r.cluster for r in out.collect()} == _union_find_clusters(edges)
+
+
+def test_cluster_duplicates_cross_partition_random_graphs(spark):
+    """Components split across partitions leave cross edges for the
+    label rounds: round-robin spread, and hash partitioning on d2 so
+    that a star's edges land apart."""
+    import random
+
+    rng = random.Random(41)
+    for trial in range(3):
+        n = 120
+        edges = [
+            (rng.randrange(n), rng.randrange(n))
+            for _ in range(rng.randrange(60, 110))
+        ]
+        edges = [(a, b) for a, b in edges if a != b]
+        edges += [(7, 200 + k) for k in range(6)]  # a star
+        df = spark.createDataFrame(edges, "d1 long, d2 long")
+        for pairs in (df.repartition(4), df.repartition(4, "d2")):
+            assert _crosses_partitions(pairs)
+            assert _clusters(pairs) == _union_find_clusters(edges), trial
+
+
+def test_cluster_duplicates_chain_across_partitions_converges_logarithmically(
+    spark,
+):
+    """A 64-node path whose edges scatter over 8 partitions leaves the
+    rounds a graph of diameter near 63; pointer doubling must still
+    finish inside 12 rounds."""
+    import random
+
+    edges = [(i, i + 1) for i in range(63)]
+    random.Random(5).shuffle(edges)
+    pairs = spark.createDataFrame(edges, "d1 long, d2 long").repartition(8)
+    assert _crosses_partitions(pairs)
+    assert _clusters(pairs, max_iters=12) == {i: 0 for i in range(64)}
+
+
+def test_cluster_duplicates_string_ids_across_partitions(spark):
+    """String ids through the cross-partition rounds: Python's order on
+    the local roots must agree with Spark's min, and convergence takes
+    the changed-row count."""
+    import random
+
+    rng = random.Random(8)
+    words = [f"doc{rng.randrange(10**6):06d}" for _ in range(40)]
+    edges = [(rng.choice(words), rng.choice(words)) for _ in range(45)]
+    edges = [(a, b) for a, b in edges if a != b]
+    edges += [("Zeta", "alpha"), ("alpha", "\u00e9t\u00e9"), ("\u00e9t\u00e9", "doc")]
+    pairs = spark.createDataFrame(edges, "d1 string, d2 string").repartition(2)
+    assert _crosses_partitions(pairs)
+    assert _clusters(pairs) == _union_find_clusters(edges)
+
+
+def test_cluster_duplicates_null_endpoint_joins_nothing(spark):
+    """A null id is a node of its own: it gets a null cluster and
+    links none of its partners, as equi-join rounds over every edge
+    treated it."""
+    pairs = spark.createDataFrame(
+        [(5, None), (5, 6), (None, 9)], "d1 long, d2 long"
+    )
+    assert _clusters(pairs) == {5: 5, 6: 5, 9: 9, None: None}
+
+
+def test_cluster_duplicates_empty_pairs(spark):
+    pairs = spark.createDataFrame([], "d1 long, d2 long")
+    out = D.cluster_duplicates(pairs)
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,cluster:bigint>"
+
+
 def test_verify_candidate_pairs_matches_exact_verifier(spark):
     """The candidate-verify composition must agree bit-for-bit with
     the inverted-index exact verifier on every pair it emits, and must
