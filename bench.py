@@ -1,9 +1,11 @@
 """Benchmark harness — runs the headline workload queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]``, writes the full record (cold and warm
+seconds per query, CPU steal) to ``bench_out.json`` and ends stdout
+with ONE compact JSON line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q...": sec, ...}, "sf": ...}
+    {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+     "queries": {8 slowest "q...": sec}, "queries_full": "bench_out.json"}
 
 Each query is timed as plan-build + execution to completion via a
 count-style action (``df.foreach(noop)`` would pull nothing; we use
@@ -24,90 +26,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from kaj_query_engine_spark.session import get_spark
 from kaj_query_engine_spark.workload import all_queries
-
-
-def host_factor_for(
-    warm: dict[str, float],
-    prev_warm: dict[str, float],
-    changed: list[str] | set[str],
-    min_n: int = 10,
-    noise_floor: float = 0.2,
-) -> tuple[float | None, int]:
-    """(median warm ratio vs the previous record over round-UNCHANGED
-    queries, sample count) — the suite-wide host-speed estimate a
-    changed query's regression cannot hide in (changed queries are
-    excluded; a single slow unchanged query barely moves a median of
-    dozens). None when fewer than ``min_n`` queries are comparable;
-    previous timings under ``noise_floor`` seconds are excluded as
-    quantization noise. Pure, so the policy itself is unit-tested."""
-    ratios = sorted(
-        warm[n] / prev_warm[n]
-        for n in warm
-        if n in prev_warm
-        and n not in changed
-        and prev_warm[n] >= noise_floor
-        and warm[n] > 0
-    )
-    n = len(ratios)
-    if n < min_n:
-        return None, n
-    mid = n // 2
-    med = ratios[mid] if n % 2 else (ratios[mid - 1] + ratios[mid]) / 2
-    return round(med, 3), n
-
-
-def canary_decide(
-    ref: float,
-    measured: float,
-    end_measured: float,
-    host_factor: float | None,
-    *,
-    prev_ref: float | None = None,
-    prev_ratio: float | None = None,
-    prev_streak: int = 0,
-    ratchet_down_ref: float | None = None,
-) -> dict:
-    """Pure canary verdict (round 12 — unit-tested so the streak /
-    re-ratchet state machine is pinned, not trusted to one live run a
-    round): ``ok`` = both probes within the 1.10 bound. A red run is
-    ``explained`` when its BEST probe is within bound of what host
-    movement predicts — the previous run's ratio against the SAME pin
-    (an inherited red: the epoch shifted in an earlier round) times
-    this round's suite-median host_factor (a shift this round); a
-    q45-specific regression exceeds both and never reads explained.
-    Round-13 tightening (advice): the expectation must be
-    MEANINGFULLY above 1 (>1.05) for a red to read explained — on a
-    flat host (host_factor≈1, no inherited ratio) a noisy SLOT probe
-    whose END probe is green is just noise, not an epoch shift, and
-    must not advance the streak. Three consecutive explained reds
-    re-pin to the current epoch's reading — the BEST of the two
-    probes, so an outlier slot reading cannot become the new pin
-    (the ratchet-DOWN rule — two consecutive faster runs, resolved by
-    the caller and passed as ``ratchet_down_ref`` — pulls the pin
-    back when the fast era returns)."""
-    ok = measured <= 1.10 * ref and end_measured <= 1.10 * ref
-    pr = 1.0
-    if prev_ref == ref and prev_ratio:
-        pr = float(prev_ratio)
-    expectation = max(1.0, pr * host_factor) if host_factor else 1.0
-    best = min(measured, end_measured)
-    explained = bool(
-        not ok
-        and host_factor
-        and expectation > 1.05
-        and best <= 1.10 * ref * expectation
-    )
-    streak = prev_streak + 1 if explained else 0
-    new_ref = ratchet_down_ref if ratchet_down_ref is not None else ref
-    if streak >= 3:
-        new_ref = best
-        streak = 0
-    return {
-        "ok": ok,
-        "explained": explained,
-        "explained_streak": streak,
-        "new_ref": new_ref,
-    }
 
 
 def _cpu_counters() -> tuple[int, int] | None:
@@ -138,7 +56,7 @@ def main() -> None:
         "kaj-bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
 
-    queries = {n: q for n, q in sorted(all_queries().items()) if q.bench}
+    queries = dict(sorted(all_queries().items()))
 
     # one warm-up action so JVM/codegen/session setup isn't billed to q00
     next(iter(queries.values())).spark(spark, sf_dir).write.format("noop").mode(
@@ -189,184 +107,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         warm[name] = round(time.time() - start, 3)
 
-    # ---- host factor -------------------------------------------------
-    # The canary is ONE query; co-tenant host load can shift the whole
-    # suite (round 11: every unchanged query read ~1.38x its committed
-    # record on two different hosts while the code was untouched). The
-    # mechanical version of the hand analysis both the builder and the
-    # judge did that round: the MEDIAN warm ratio vs the previous
-    # committed bench_out.json over queries whose implementation did
-    # NOT change this round (the registry's RULE-1 list is the round's
-    # changed set). ~1.0 => same host era, uniformly >1 => host
-    # slowdown that explains a red canary, and a changed query's real
-    # regression can never hide in it (changed queries are excluded;
-    # a single slow unchanged query moves a median of dozens by ~0).
-    prev_rec: dict = {}
-    out_path = Path(__file__).resolve().parent / "bench_out.json"
-    try:
-        prev_rec = json.loads(out_path.read_text())
-    except Exception:
-        prev_rec = {}
-    host_factor = None
-    host_n = 0
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    if str(prev_rec.get("sf")) == str(sf_val):
-        from kaj_query_engine_spark.workload.registry import (
-            _CHANGED_THIS_ROUND,
-        )
-
-        host_factor, host_n = host_factor_for(
-            warm, prev_rec.get("queries_warm") or {}, _CHANGED_THIS_ROUND
-        )
-    # auditability of the chained factor (round 13): record WHICH
-    # record this run's host_factor compared against — the commit
-    # that last touched bench_out.json, '+dirty' when the working
-    # copy differs from it (an uncommitted record was the base)
-    host_factor_base = None
-    if host_factor is not None:
-        try:
-            import subprocess
-
-            repo = Path(__file__).resolve().parent
-            base = subprocess.run(
-                ["git", "log", "-1", "--format=%h", "--", "bench_out.json"],
-                cwd=repo, capture_output=True, text=True, check=True,
-            ).stdout.strip() or None
-            if base:
-                dirty = subprocess.run(
-                    ["git", "status", "--porcelain", "--", "bench_out.json"],
-                    cwd=repo, capture_output=True, text=True, check=True,
-                ).stdout.strip()
-                host_factor_base = base + ("+dirty" if dirty else "")
-        except Exception:
-            host_factor_base = None
-
-    # ---- canary protocol -------------------------------------------
-    # Host drift on this box spans ±10-25% on totals for identical code
-    # (PERF.md records 54.6-68.2 s cold same-day). q45 is the designated
-    # canary: it hasn't changed since round 4, so its warm reading
-    # against a PINNED settled-box reference separates host noise from
-    # real regressions. Outside ±10%, re-measure up to twice and keep
-    # the best; still outside -> canary_ok=false, telling the reader to
-    # discount cross-round deltas in this artifact.
-    #
-    # The reference RATCHETS DOWN only when a faster reading REPEATS:
-    # new ref = min(ref, max(last two measurements)). A single
-    # anomalously fast reading (residual page-cache warmth, a fluke)
-    # can no longer permanently lower the pin and flag every honest
-    # settled run after it — two consecutive runs must both beat the
-    # pin before it moves. Only SLOW readings flag: ok = measured <=
-    # 1.1 * ref. Hot runs can't contaminate the pin (the first
-    # protocol version tracked the last run's own measurement and
-    # drifted 5.06 -> 6.78 after a post-pytest bench). A persistent
-    # not-ok therefore means a real host-era slowdown or a q45 code
-    # change; reset deliberately via $SPARK_GRAFT_CANARY_REF.
-    #
-    # The pin also re-ratchets UP when a red canary is EXPLAINED by the
-    # host factor for three consecutive runs (round-11 advice: the
-    # 3.979 s pin was set in an unusually fast host window and five
-    # round-11 runs read 1.15-1.6x on unchanged code). "Explained" =
-    # measured/host_factor within the same 1.10 bound — i.e. the
-    # canary slowed exactly as much as the unchanged fleet did, which
-    # is a host signature, not a q45 regression (q45 is excluded from
-    # nothing here: were q45 itself changed this round it would be in
-    # the RULE-1 list and the streak would not advance). After three
-    # such runs the pin moves to the current epoch's reading; the
-    # ratchet-DOWN rule (two consecutive faster runs) pulls it back
-    # when the fast era returns, so the pin tracks host epochs in both
-    # directions instead of one unusually fast window forever.
-    canary_name = "q45_sketch_aggregates"
-    canary: dict = {"query": canary_name, "ref": None, "ok": None}
-    if canary_name in queries:
-        env_ref = os.environ.get("SPARK_GRAFT_CANARY_REF")
-        prev_measured = None
-        prev_explained_streak = 0
-        prev_canary: dict = {}
-        try:
-            prev = prev_rec
-            prev_canary = prev.get("canary") or {}
-            prev_explained_streak = int(
-                prev_canary.get("explained_streak") or 0
-            )
-            if str(prev.get("sf")) != str(
-                float(sf) if sf.replace(".", "").isdigit() else sf
-            ):
-                # pin is per-SF: a smaller-SF drive run would otherwise
-                # ratchet the pin below any honest full-SF reading
-                ref = None
-            else:
-                # pinned ref from the last artifact; fall back to the
-                # last measurement only when no pin exists (bootstrap)
-                ref = prev_canary.get("ref") or prev["queries_warm"][canary_name]
-                prev_measured = prev_canary.get("measured")
-        except Exception:
-            ref = None
-        if env_ref:
-            ref = float(env_ref)
-        measured = warm.get(canary_name)
-        if ref:
-            # re-measure only when SLOW (a fast reading needs no retry)
-            for _ in range(2):
-                if measured is not None and measured <= 1.10 * ref:
-                    break
-                spark.catalog.clearCache()
-                spark._jvm.System.gc()
-                start = time.time()
-                queries[canary_name].spark(spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                measured = min(measured, round(time.time() - start, 3))
-            # lower the pin only when the faster era REPEATS: both this
-            # run and the previous run must beat the current ref, and
-            # the new pin is the slower (max) of the two — a one-off
-            # fluke reading never moves it
-            new_ref = ref
-            if measured < ref and prev_measured is not None and prev_measured < ref:
-                new_ref = max(measured, prev_measured)
-            # second probe at the END of the run: the canary's warm
-            # slot sits mid-alphabet, so a host that degrades for part
-            # of the run evades a single point probe (observed live in
-            # round 8: q53-q68 read 7-22x slow while q45's slot and
-            # the tail were normal, and the artifact still said
-            # canary_ok). ok now requires BOTH probes within bound;
-            # the ratchet still keys on the slot reading only.
-            end_measured = None
-            for _ in range(2):  # same retry-on-slow rule as the slot
-                spark.catalog.clearCache()
-                spark._jvm.System.gc()
-                start = time.time()
-                queries[canary_name].spark(spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                took = round(time.time() - start, 3)
-                end_measured = took if end_measured is None else min(
-                    end_measured, took
-                )
-                if end_measured <= 1.10 * ref:
-                    break
-            verdict = canary_decide(
-                ref,
-                measured,
-                end_measured,
-                host_factor,
-                prev_ref=prev_canary.get("ref"),
-                prev_ratio=prev_canary.get("ratio"),
-                prev_streak=prev_explained_streak,
-                ratchet_down_ref=new_ref,
-            )
-            canary = {
-                "query": canary_name,
-                "ref": round(verdict["new_ref"], 3),
-                "measured": measured,
-                "ratio": round(measured / ref, 3),
-                "end_measured": end_measured,
-                "end_ratio": round(end_measured / ref, 3),
-                "ok": verdict["ok"],
-                "explained": verdict["explained"],
-                "explained_streak": verdict["explained_streak"],
-            }
-
-    # ---- host-window instrumentation (round 15, ADDITIVE keys) ------
+    # ---- host-window instrumentation ------------------------------
     # steal% over the whole run + loadavg at both ends. window_ok=false
     # (steal > 5%) marks the record as taken in a contaminated window:
     # per the round-14 lesson (8-11% sustained steal produced 0.78-2.1x
@@ -390,22 +131,10 @@ def main() -> None:
         "queries": timings,
         "queries_warm": warm,
         "total_warm": round(sum(warm.values()), 3),
-        "canary_ok": canary["ok"],
-        "canary": canary,
-        # median warm ratio vs the previous committed record over
-        # round-UNCHANGED queries (null when <10 comparable): ~1.0 =>
-        # same host era; uniformly >1 explains a red canary as host
-        # load. Divide totals by it to compare rounds.
-        "host_factor": host_factor,
-        "host_factor_n": host_n,
-        # commit of the bench_out.json this run's host_factor compared
-        # against ('+dirty' = uncommitted working copy) — makes the
-        # chained factors auditable record-to-record
-        "host_factor_base": host_factor_base,
-        # round-15 additions (old keys byte-compatible): the run's own
-        # CPU-steal share and loadavg bracket; window_ok=false => the
-        # window was steal-contaminated and this record's per-query
-        # regressions are not evidence against the code
+        # the run's own CPU-steal share and loadavg bracket;
+        # window_ok=false => the window was steal-contaminated and this
+        # record's per-query regressions are not evidence against the
+        # code
         "steal_pct": steal_pct,
         "load_start": load_start,
         "load_end": load_end,
@@ -420,6 +149,7 @@ def main() -> None:
     # persist it to the committed artifact, and end stdout with a
     # compact summary line that fits the driver's tail window whole.
     print(json.dumps(payload))
+    out_path = Path(__file__).resolve().parent / "bench_out.json"
     out_path.write_text(json.dumps(payload, indent=1, sort_keys=True) + "\n")
     slowest = dict(
         sorted(timings.items(), key=lambda kv: -kv[1])[:8]
@@ -431,8 +161,6 @@ def main() -> None:
         "sf": payload["sf"],
         "n_queries": len(timings),
         "total_warm": payload["total_warm"],
-        "canary_ok": canary["ok"],
-        "host_factor": host_factor,
         "steal_pct": steal_pct,
         "window_ok": window_ok,
         "queries": slowest,  # 8 slowest cold; full map in bench_out.json

@@ -43,23 +43,11 @@ def _auto_broadcast_bytes(spark) -> int:
     broadcast is disabled) — the same size authority the planner
     itself consults, so the semantic-dedup pair join's broadcast
     decision below follows the session's policy instead of a magic
-    constant."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suf, mval in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if raw.endswith(suf):
-            mult, raw = mval, raw[: -len(suf)]
-            break
-    try:
-        nbytes = int(float(raw)) * mult
-    except ValueError:
-        nbytes = 10 * 1024 * 1024
-    return max(0, nbytes)
+    constant. Read parsed from the session's SQLConf, so every size
+    string Spark accepts (``1t``, ``2tb``, ``10MB``) means what it
+    means to the planner."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return max(0, conf.autoBroadcastJoinThreshold())
 
 # LSH defaults: 12 hashes = 4 bands x 3 rows → candidate threshold
 # (1/B)^(1/R) ≈ 0.63 Jaccard.
@@ -78,13 +66,14 @@ MAX_BUCKET = 64
 DF_BUDGET = 256
 
 
-def _bucket_pairs(ids_col: str = "ids"):
-    """All (d1 < d2) pairs from an array column of bucket members —
-    the JVM expression shared by the LSH and inverted-index candidate
-    generators (one definition so the pair semantics stay in sync)."""
+def _bucket_pairs():
+    """All (d1 < d2) pairs from the ``ids`` array column of bucket
+    members — the JVM expression shared by the LSH and inverted-index
+    candidate generators (one definition so the pair semantics stay in
+    sync)."""
     return F.explode(
         F.expr(
-            f"filter(flatten(transform({ids_col}, x -> transform({ids_col}, "
+            "filter(flatten(transform(ids, x -> transform(ids, "
             "y -> struct(x AS d1, y AS d2)))), p -> p.d1 < p.d2)"
         )
     )
@@ -139,14 +128,12 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
 MINHASH_SALT_SEED = 13
 
 
-def minhash_salts(
-    num_hashes: int = NUM_HASHES, seed: int = MINHASH_SALT_SEED
-) -> list[int]:
+def minhash_salts(num_hashes: int = NUM_HASHES) -> list[int]:
     """Fixed 60-bit XOR salts (same literals are embedded in the
     DuckDB oracle SQL)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(MINHASH_SALT_SEED)
     return [rng.getrandbits(60) for _ in range(num_hashes)]
 
 
@@ -194,9 +181,6 @@ def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
     max_bucket: int | None = MAX_BUCKET,
 ) -> DataFrame:
     """Distinct candidate near-duplicate pairs (d1 < d2) sharing at
@@ -210,10 +194,7 @@ def minhash_lsh_candidates(
     number of *real* near-dup groups. ``None`` disables the cap (the
     exhaustive-verification mode).
     """
-    rows = num_hashes // num_bands
-    bands = lsh_bands(
-        minhash_signatures(df, id_col, text_col, num_hashes, n), num_bands, rows
-    )
+    bands = lsh_bands(minhash_signatures(df, id_col, text_col))
     # bucket-collect instead of a self-join: a self-join recomputes the
     # whole signature pipeline for each side (no ReusedExchange across
     # the join), while collect_list computes it ONCE and generates the
@@ -235,124 +216,14 @@ def minhash_lsh_candidates(
     )
 
 
-def incremental_exact_matches(
-    index: DataFrame, batch: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Batch docs byte-identical (after casefold/space-collapse) to an
-    existing corpus document, given the corpus's
-    :func:`exact_duplicates` output as a materialized fingerprint
-    index: (id, keep_id, n_old) — the batch doc, the corpus
-    representative it duplicates, and how many corpus copies exist.
-
-    The exact-layer companion of :func:`incremental_lsh_candidates`,
-    same probe shape: batch fingerprints are broadcast (batch-bounded
-    side) into ONE map-only scan of the index — no corpus shuffle, no
-    corpus recompute. Batch-internal duplicates are not this
-    operator's job (run :func:`exact_duplicates` on the batch).
-    """
-    bfp = batch.select(
-        F.col(id_col).alias("id"), doc_fingerprint(F.col(text_col)).alias("h")
-    )
-    return index.join(F.broadcast(bfp), "h").select(
-        "id", "keep_id", F.col("n").alias("n_old")
-    )
-
-
-def merge_fp_index(
-    index: DataFrame, batch: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Admit a batch into an :func:`exact_duplicates` fingerprint
-    index without rebuilding: ONE full-outer equi-join on the digest —
-    counts add, the representative stays the min id across both sides.
-    Differentially pinned equal to ``exact_duplicates(old ∪ batch)``.
-
-    A representative-lost marker (``keep_id`` NULL, left by
-    :func:`remove_from_fp_index`) stays NULL through the merge: the
-    group's true minimum among survivors is unknown, and claiming the
-    batch's min id would silently elect a wrong representative over a
-    smaller-id surviving corpus doc.
-    """
-    # no broadcast hint: Spark cannot broadcast a side of a FULL OUTER
-    # join (the hint would be silently ignored) — this is the one
-    # index-row-sized shuffle the merge costs, same as merge_band_index
-    b = exact_duplicates(batch, id_col, text_col).select(
-        "h", F.col("n").alias("bn"), F.col("keep_id").alias("bkeep")
-    )
-    rep_lost = F.col("n").isNotNull() & F.col("keep_id").isNull()
-    return index.join(b, "h", "full_outer").select(
-        "h",
-        (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("bn"), F.lit(0))).alias("n"),
-        F.when(
-            ~rep_lost,
-            F.least(
-                F.coalesce(F.col("keep_id"), F.col("bkeep")),
-                F.coalesce(F.col("bkeep"), F.col("keep_id")),
-            ),
-        ).alias("keep_id"),
-    )
-
-
-def remove_from_fp_index(
-    index: DataFrame, removed: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Delete documents from a fingerprint index (right-to-erasure):
-    recompute the removed docs' fingerprints, decrement counts, drop
-    emptied digests. The index stores only ONE member id per digest
-    (``keep_id``), so when the removed set contains the representative
-    of a group that still has survivors, the new representative is
-    unknowable from the index alone — that row comes back with
-    ``keep_id = NULL`` ("representative lost; reassign on next
-    rebuild or from the corpus"), mirroring the band index's
-    permanent-tombstone convention: conservative, never inventing an
-    id that might itself be deleted. Differentially pinned equal to a
-    rebuild on the surviving corpus everywhere except exactly those
-    NULLed representatives.
-
-    CONTRACT: ``removed`` must contain only docs previously admitted
-    into this index, each at most once — the index stores one count
-    per digest, no member ids, so a removal of a never-indexed doc
-    with identical text (or a replayed erasure request) is
-    indistinguishable from a real member and would under-count the
-    group, potentially dropping a digest that still has survivors.
-    Erasure pipelines should dedupe requests against the admitted-id
-    log before calling this (the band index's live buckets are
-    membership-guarded and don't need this; its tombstones share it).
-    """
-    r = removed.select(
-        doc_fingerprint(F.col(text_col)).alias("h"),
-        F.col(id_col).alias("rid"),
-    )
-    gone = r.groupBy("h").agg(
-        F.count(F.lit(1)).alias("gn"), F.min("rid").alias("rmin")
-    )
-    n_left = F.col("n") - F.coalesce(F.col("gn"), F.lit(0))
-    keep = F.when(
-        F.col("gn").isNull() | (F.col("keep_id") < F.col("rmin")),
-        F.col("keep_id"),
-    )  # otherwise NULL: the min id of the group was removed
-    return (
-        index.join(F.broadcast(gone), "h", "left")
-        .select("h", n_left.alias("n"), keep.alias("keep_id"))
-        .filter(F.col("n") > 0)
-    )
-
-
-def band_bucket_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
+def band_bucket_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Corpus-side LSH band-bucket index for INCREMENTAL dedup:
     (band, key, ids, w) — one row per occupied bucket, ids sorted for
     determinism. A new batch of documents can then be deduped against
     the corpus without recomputing a single corpus shingle
     (:func:`incremental_lsh_candidates`).
 
-    Over-wide buckets (w > max_bucket — boilerplate/junk clusters) are
+    Over-wide buckets (w > MAX_BUCKET — boilerplate/junk clusters) are
     kept as TOMBSTONES: ``ids`` is nulled but ``w`` is recorded. The
     cap is defined on the bucket's *combined* width, and a bucket that
     is already junk corpus-side can only grow — so its member ids are
@@ -364,12 +235,7 @@ def band_bucket_index(
     Index size is one row per occupied bucket (≤ B rows per doc),
     independent of document length — ~32 bytes + 8·w per row.
     """
-    rows = num_hashes // num_bands
-    bands = lsh_bands(
-        minhash_signatures(df, id_col, text_col, num_hashes, n),
-        num_bands,
-        rows,
-    )
+    bands = lsh_bands(minhash_signatures(df, id_col, text_col))
     w = F.size("ids")
     return (
         bands.groupBy("band", "key")
@@ -377,21 +243,14 @@ def band_bucket_index(
         .select(
             "band",
             "key",
-            F.when(w <= max_bucket, F.col("ids")).alias("ids"),
+            F.when(w <= MAX_BUCKET, F.col("ids")).alias("ids"),
             w.alias("w"),
         )
     )
 
 
 def merge_band_index(
-    index: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    max_bucket: int = MAX_BUCKET,
+    index: DataFrame, batch: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Admit a batch into an existing :func:`band_bucket_index`
     WITHOUT rebuilding it: returns the index of ``old ∪ batch``
@@ -408,11 +267,7 @@ def merge_band_index(
     tombstones: width is always additive, ids are kept only while the
     bucket is alive, so junk never accumulates bytes.
     """
-    nb = lsh_bands(
-        minhash_signatures(batch, id_col, text_col, num_hashes, n),
-        num_bands,
-        num_hashes // num_bands,
-    )
+    nb = lsh_bands(minhash_signatures(batch, id_col, text_col))
     add = nb.groupBy("band", "key").agg(
         F.array_sort(F.collect_list("id")).alias("new_ids")
     )
@@ -422,7 +277,7 @@ def merge_band_index(
     )
     # a tombstoned old bucket (ids NULL, w > cap) must stay dead even
     # though the merged array below would only hold the new ids
-    alive = (merged_w <= max_bucket) & (
+    alive = (merged_w <= MAX_BUCKET) & (
         F.col("w").isNull() | F.col("ids").isNotNull()
     )
     merged_ids = F.array_sort(
@@ -439,81 +294,8 @@ def merge_band_index(
     )
 
 
-def remove_from_band_index(
-    index: DataFrame,
-    removed: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-) -> DataFrame:
-    """Delete documents from a :func:`band_bucket_index` (the
-    right-to-erasure path): recompute the removed docs' band keys from
-    their text (one batch-sized pass — the index stores no per-doc
-    reverse mapping), subtract their ids from live buckets, decrement
-    widths, and drop emptied buckets. ONE equi-join on (band, key)
-    with the removed-side bucket table broadcast — the corpus-side
-    index is scanned map-only, same economics as the probe.
-
-    Tombstones are PERMANENT until a rebuild: a tombstoned bucket's
-    member ids were discarded at capping, so when deletions bring its
-    width back under ``max_bucket`` there is nothing to revive —
-    the bucket keeps ``ids = NULL`` with its (correctly decremented)
-    width, continuing to suppress pair generation. That is the
-    conservative direction (dedup may MISS pairs in such buckets,
-    never invent them); reclaiming them is what a periodic index
-    rebuild is for. Differentially pinned in tests: equal to a
-    rebuild on the surviving corpus everywhere except exactly those
-    fallen-under-cap tombstones.
-    """
-    rb = lsh_bands(
-        minhash_signatures(removed, id_col, text_col, num_hashes, n),
-        num_bands,
-        num_hashes // num_bands,
-    )
-    gone = rb.groupBy("band", "key").agg(
-        F.collect_list("id").alias("gone_ids")
-    )
-    # array_except dedupes too — harmless, a doc appears at most once
-    # per bucket; re-sort to keep the index's sorted-ids invariant
-    gone_arr = F.coalesce(F.col("gone_ids"), F.slice(F.col("ids"), 1, 0))
-    remaining = F.array_sort(F.array_except(F.col("ids"), gone_arr))
-    # LIVE buckets decrement by actual MEMBERSHIP (ids ∩ gone), not by
-    # band-key presence: a removal request naming a doc that was never
-    # ADMITTED (e.g. rejected at ingest) still hashes to its near-dups'
-    # bucket keys, and a presence-based decrement would corrupt or
-    # delete buckets whose real members all survive (same for a
-    # replayed removal). Tombstones have no ids to intersect — their
-    # decrement assumes the contract that only INDEXED docs are ever
-    # removed; a violation merely under-counts a bucket that stays
-    # dead regardless (the tombstone marker, not the width, suppresses
-    # pairs), so the failure direction is harmless there.
-    n_gone_live = F.size(F.array_intersect(F.col("ids"), gone_arr))
-    n_gone = F.when(F.col("ids").isNotNull(), n_gone_live).otherwise(
-        F.coalesce(F.size("gone_ids"), F.lit(0))
-    )
-    return (
-        index.join(F.broadcast(gone), ["band", "key"], "left")
-        .select(
-            "band",
-            "key",
-            F.when(F.col("ids").isNotNull(), remaining).alias("ids"),
-            (F.col("w") - n_gone).alias("w"),
-        )
-        .filter(F.col("w") > 0)
-    )
-
-
 def incremental_lsh_candidates(
-    index: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    max_bucket: int = MAX_BUCKET,
+    index: DataFrame, batch: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Candidate near-dup pairs for an INCOMING batch against an
     existing corpus, given the corpus's :func:`band_bucket_index` —
@@ -535,12 +317,7 @@ def incremental_lsh_candidates(
     bounded per ingest like ANN query sets, so the explicit broadcast
     cannot grow with the corpus.
     """
-    rows = num_hashes // num_bands
-    nb = lsh_bands(
-        minhash_signatures(batch, id_col, text_col, num_hashes, n),
-        num_bands,
-        rows,
-    )
+    nb = lsh_bands(minhash_signatures(batch, id_col, text_col))
     # the batch bucket table feeds TWO subtrees (the broadcast key
     # probe and the left join's stream side); without materialization
     # the whole batch shingle→signature pipeline runs twice per action.
@@ -581,89 +358,17 @@ def incremental_lsh_candidates(
             "p -> p.d1 < p.d2)"
         ),
     )
-    # a tombstone is dead even if its width is (or falls) under the
-    # cap: before deletions existed the width filter subsumed this
-    # (tombstones always had w > cap), but remove_from_band_index can
-    # decrement a tombstone under the cap with its ids long discarded
+    # a tombstone is dead whatever width it records: its ids were
+    # discarded at capping, so an index whose stored width sits at or
+    # under the cap (edited outside this module) must not revive it
     not_tombstone = F.col("w").isNull() | F.col("ids").isNotNull()
     return (
         combined.withColumn("_old_ids", old_ids)
-        .filter((w_comb <= max_bucket) & not_tombstone)
+        .filter((w_comb <= MAX_BUCKET) & not_tombstone)
         .select(F.explode(pairs_arr).alias("p"))
         .select("p.d1", "p.d2")
         .distinct()
     )
-
-
-def ingest_batch(
-    corpus: DataFrame,
-    index: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.4,
-    n: int = 3,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    max_bucket: int = MAX_BUCKET,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The whole incremental-ingest lifecycle in one call: returns
-    ``(admitted, dup_pairs, new_index)`` —
-
-    1. probe the corpus :func:`band_bucket_index` with the batch
-       (:func:`incremental_lsh_candidates` — one map-only index scan);
-    2. verify candidates with exact n-gram Jaccard
-       (:func:`verify_candidate_pairs`) — the corpus contributes ONLY
-       candidate-touched documents (semi-join inside the verifier), so
-       corpus text I/O is candidate-bounded, not corpus-bounded;
-    3. drop every batch doc verified ≥ threshold against an EXISTING
-       doc (the corpus always wins, whatever the ids), and of a
-       verified batch-batch pair keep the smaller id (pairwise
-       min-id-wins — chain-transitive grouping is
-       :func:`cluster_duplicates`' job when needed);
-    4. merge the surviving docs into the index
-       (:func:`merge_band_index`) so the next batch probes them too.
-
-    ``corpus`` must contain the batch rows as well (the verifier needs
-    both sides' text); ``dup_pairs`` is the verified evidence
-    (d1, d2, jaccard) for audit. The band parameters MUST match the
-    ones the index was built with — mismatched bands would hash into
-    different buckets, silently finding nothing and then corrupting
-    the merged index with foreign-banded rows.
-
-    ``dup_pairs`` is materialized once (localCheckpoint — it is
-    candidate-bounded, the same reason its broadcast joins are safe):
-    all three returned frames hang off it, and without the barrier a
-    caller writing admitted + auditing dup_pairs + writing the new
-    index would re-run the corpus semi-join and exact verification
-    once per action.
-    """
-    cand = incremental_lsh_candidates(
-        index, batch, id_col, text_col, num_hashes, num_bands, n, max_bucket
-    )
-    dup_pairs = verify_candidate_pairs(
-        corpus, cand, id_col, text_col, n=n, threshold=threshold
-    ).localCheckpoint(eager=True)
-    # membership flags, not id order: a modulo or interleaved split
-    # puts old ids above batch ids, so "greater id loses" would
-    # wrongly keep a batch doc that duplicates a bigger-id OLD doc
-    m1 = batch.select(F.col(id_col).alias("d1"), F.lit(True).alias("_n1"))
-    m2 = batch.select(F.col(id_col).alias("d2"), F.lit(True).alias("_n2"))
-    flagged = dup_pairs.join(m1, "d1", "left").join(m2, "d2", "left")
-    n1 = F.coalesce(F.col("_n1"), F.lit(False))
-    n2 = F.coalesce(F.col("_n2"), F.lit(False))
-    # pairs are d1 < d2, every pair involves >= 1 batch doc:
-    # both new -> d2 loses; new-vs-old -> the new side loses
-    losers = flagged.select(
-        F.when(n1 & ~n2, F.col("d1")).otherwise(F.col("d2")).alias("_loser")
-    ).distinct()
-    admitted = batch.join(
-        losers, F.col(id_col) == F.col("_loser"), "left_anti"
-    )
-    new_index = merge_band_index(
-        index, admitted, id_col, text_col, num_hashes, num_bands, n, max_bucket
-    )
-    return admitted, dup_pairs, new_index
 
 
 def ngram_jaccard_pairs(
@@ -1035,16 +740,14 @@ def _min_label_rounds(edges: DataFrame, max_iters: int) -> DataFrame:
     )
 
 
-def simhash_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 32
-) -> DataFrame:
-    """(id, simhash bitstring) — per-bit majority vote over md5 hex
-    nibbles of each distinct token (bit b = high bit of hex digit b).
+def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, 32-bit simhash bitstring) — per-bit majority vote over md5
+    hex nibbles of each distinct token (bit b = high bit of hex digit
+    b; md5 hex has exactly 32 nibbles).
 
     Portable construction: bit_b(token) = md5(token)[b] in '8'..'f'.
-    One explode + one groupBy(id) with `bits` sum-aggregates.
+    One explode + one groupBy(id) with 32 sum-aggregates.
     """
-    assert bits <= 32  # md5 hex has 32 nibbles
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     tok = df.repartition(n_parts, F.col(id_col)).select(
         F.col(id_col).alias("id"),
@@ -1058,12 +761,12 @@ def simhash_fingerprints(
         F.sum(
             F.when(F.substring(h, b + 1, 1).isin(*hi), 1).otherwise(-1)
         ).alias(f"v{b}")
-        for b in range(bits)
+        for b in range(32)
     ]
     voted = tok.groupBy("id").agg(*votes)
     bit_chars = [
         F.when(F.col(f"v{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for b in range(bits)
+        for b in range(32)
     ]
     return voted.select("id", F.concat(*bit_chars).alias("simhash"))
 
@@ -1073,13 +776,12 @@ def duplicated_spans(
     id_col: str,
     text_col: str,
     k: int = 8,
-    min_count: int = 2,
     hash_grams: bool = False,
 ) -> DataFrame:
     """Span-level exact-substring dedup — the ExactSubstr shape of Lee
     et al. 2022 ("Deduplicating Training Data Makes Language Models
     Better"), re-expressed relationally: flag every token position
-    whose k-token gram occurs ``min_count``+ times ANYWHERE in the
+    whose k-token gram occurs twice or more ANYWHERE in the
     corpus (cross-doc or within-doc), then merge overlapping/adjacent
     flagged [pos, pos+k) windows into maximal islands per document —
     the character of the suffix-array approach (find long duplicated
@@ -1146,7 +848,7 @@ def duplicated_spans(
         grams.withColumn(
             "c", F.count(F.lit(1)).over(W.partitionBy("gram"))
         )
-        .filter(F.col("c") >= min_count)
+        .filter(F.col("c") >= 2)
         .select("id", "pos")
     )
     return _merge_flagged_islands(flagged, k)

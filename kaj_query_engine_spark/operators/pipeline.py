@@ -53,21 +53,19 @@ def stratified_sample(
     id_col: str,
     stratum_col: str,
     rates: dict[str, float],
-    default_rate: float = 0.0,
     seed: int = 17,
 ) -> DataFrame:
     """Keep each row with its stratum's probability, deterministically:
     P(keep) = rates[stratum], decided by id-hash — no RNG state, no
     shuffle, stable across retries/partitionings (a distributed
-    trainer can re-derive exactly which docs are in the mix)."""
+    trainer can re-derive exactly which docs are in the mix). A
+    stratum missing from ``rates`` keeps nothing."""
     u = hash_unit(F.col(id_col), seed)
-    thresh = F.lit(int(default_rate * SAMPLE_SCALE))
     expr = F.lit(None).cast("int")
     for k, v in sorted(rates.items()):
         cond = F.col(stratum_col) == k
         expr = F.when(cond, int(v * SAMPLE_SCALE)).otherwise(expr)
-    expr = F.coalesce(expr, thresh)
-    return df.filter(u < expr)
+    return df.filter(u < F.coalesce(expr, F.lit(0)))
 
 
 def _bloom_hash(s: Column, i: int) -> Column:
@@ -239,144 +237,6 @@ def decontaminate(
             (F.col("n_hit") / F.col("n_shingles")).alias("contamination"),
         )
     )
-
-
-def build_training_corpus(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    out_path: str,
-    benchmarks: DataFrame | None = None,
-    max_tokens: int = 1024,
-    num_shards: int = 8,
-    max_records_per_file: int = 100_000,
-    jaccard_threshold: float = 0.4,
-    dsir_target: DataFrame | None = None,
-    dsir_k: int | None = None,
-) -> tuple[DataFrame, list[tuple[str, int]]]:
-    """The whole corpus-construction pipeline, composed end-to-end
-    from the individually-tested operators — raw documents in,
-    training shards + manifest out, with a per-stage survivor count
-    funnel for the data card:
-
-    1. **quality gate** — Gopher A1.1 rules (JVM expressions, one scan);
-    2. **exact dedup** — keep the min-id doc per content fingerprint;
-    3. **near dedup** — MinHash+LSH candidates → exact n-gram-Jaccard
-       verification at ``jaccard_threshold`` → connected components →
-       keep each cluster's min-id representative;
-    4. **decontamination** — drop docs sharing n-grams with the
-       benchmark set (skipped when ``benchmarks`` is None);
-    5. **domain matching** (round 14, skipped unless both
-       ``dsir_target`` and ``dsir_k`` are given) —
-       :func:`dsir_importance_resample` keeps the ``dsir_k`` docs
-       whose hashed-n-gram profile importance-matches the target
-       corpus (after dedup/decontamination, before packing — the
-       DSIR paper's placement: select from the cleaned pool);
-    6. **pack** — concat-and-chunk into ``max_tokens`` windows per
-       id-hash shard;
-    7. **export** — size-capped parquet shards + read-back manifest.
-
-    Every stage is the shuffle-minimal operator documented in its own
-    module; this function adds NO new distributed logic — it exists so
-    the composition (the thing a user actually runs) is itself tested
-    and its stage-count funnel is one call away. Returns ``(manifest,
-    funnel)`` where funnel is ``[(stage, surviving_docs), ...]``.
-    """
-    from kaj_query_engine_spark.functions.text import gopher_ok_of, tokens
-    from kaj_query_engine_spark.operators.dedup import (
-        cluster_duplicates,
-        exact_duplicates,
-        minhash_lsh_candidates,
-        verify_candidate_pairs,
-    )
-    from kaj_query_engine_spark.sources.export import write_training_shards
-
-    funnel = [("raw", docs.count())]
-
-    # each surviving stage is persisted before its funnel count: the
-    # count is an action, and every later stage re-reads the frame —
-    # without the persist the quality gate alone would re-execute once
-    # per downstream stage (scan + tokenize + filter, ~6x total)
-    cached = []
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        df = df.persist()
-        cached.append(df)
-        funnel.append((name, df.count()))
-        return df
-
-    gated = stage(
-        "quality_gate",
-        docs.select(id_col, text_col, tokens(F.col(text_col)).alias("_toks"))
-        .filter(gopher_ok_of(F.col("_toks")))
-        .drop("_toks"),
-    )
-
-    keep_exact = exact_duplicates(gated, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    exact = stage("exact_dedup", gated.join(keep_exact, id_col, "semi"))
-
-    # candidates are VERIFIED with exact n-gram Jaccard before
-    # clustering (the ingest_batch convention): a raw band collision
-    # between genuinely-dissimilar docs would otherwise chain two
-    # components together and permanently delete a non-duplicate
-    cand = minhash_lsh_candidates(exact, id_col, text_col)
-    pairs = verify_candidate_pairs(
-        exact, cand, id_col, text_col, threshold=jaccard_threshold
-    )
-    # cluster representatives: min id per component; docs in no pair
-    # are their own singleton cluster and survive untouched
-    losers = (
-        cluster_duplicates(pairs)
-        .filter(F.col("id") != F.col("cluster"))
-        .select(F.col("id").alias(id_col))
-    )
-    neared = stage("near_dedup", exact.join(losers, id_col, "left_anti"))
-
-    if benchmarks is not None:
-        # decontaminate emits ONLY docs with >= 1 shared n-gram (its
-        # output id column is named 'id'); drop every one of them
-        flagged = decontaminate(neared, benchmarks, id_col, text_col)
-        clean = neared.join(
-            flagged.select(F.col("id").alias(id_col)), id_col, "left_anti"
-        )
-    else:
-        clean = neared
-    clean = stage("decontaminated", clean)
-
-    if dsir_target is not None and dsir_k is not None:
-        picked = dsir_importance_resample(
-            clean, dsir_target, id_col, text_col, k=dsir_k
-        ).select(F.col("id").alias(id_col))
-        clean = stage(
-            "dsir_matched", clean.join(F.broadcast(picked), id_col, "semi")
-        )
-
-    # text RIDES THROUGH packing (pack_sequences only adds shard/
-    # offset/chunk metadata columns) — the exported shards must hold
-    # the training content, not just its packing coordinates
-    with_counts = clean.select(
-        id_col, text_col, F.size(tokens(F.col(text_col))).alias("_n_tok")
-    )
-    packed = pack_sequences(
-        with_counts, id_col, "_n_tok", max_tokens, num_shards
-    )
-    manifest = write_training_shards(
-        packed,
-        out_path,
-        max_records_per_file,
-        shard_key="shard",  # co-locate each packing shard's chunks
-        n_shards=num_shards,
-        token_col="_n_tok",
-    )
-    # chunk count from the manifest (a tiny read of already-written
-    # parquet), not a seventh re-execution of the whole pipeline
-    n_packed = manifest.agg(F.sum("n_rows")).collect()[0][0] or 0
-    funnel.append(("packed_chunks", int(n_packed)))
-    for df in cached:
-        df.unpersist()
-    return manifest, funnel
 
 
 def pack_sequences(
@@ -655,8 +515,8 @@ def dsir_bucket_counts(
     """One side's DSIR model: hashed-gram occurrence counts per
     bucket — a map-only explode into a B-row partial agg, pulled to
     the driver (B longs, bounded). This is the build-once artifact a
-    deployment persists beside the corpus and maintains with
-    :func:`dsir_merge_counts` as batches land."""
+    deployment persists beside the corpus; counts are algebraic, so a
+    landed batch's counts add into it bucket by bucket."""
     # explode the gram EXPRESSION inline: Generate over a projected
     # array attribute measured ~7x slower than Generate over the
     # expression (the array round-trips through an UnsafeRow), and
@@ -703,21 +563,6 @@ def dsir_split_counts(
     return ct, cs
 
 
-def dsir_merge_counts(*counts: dict[int, int]) -> dict[int, int]:
-    """Fold incremental batch counts into a model — counts are
-    ALGEBRAIC, so merged == rebuilt-from-scratch exactly (the
-    merge==rebuild law every index here pins: band index, fp index,
-    IVF, BPE piece table). Removal (right-to-erasure) is the same
-    fold with negated batch counts; buckets never go negative on
-    honest feeds and a zero bucket is dropped to keep the dict
-    sparse."""
-    out: dict[int, int] = {}
-    for c in counts:
-        for b, n in c.items():
-            out[b] = out.get(b, 0) + n
-    return {b: n for b, n in out.items() if n != 0}
-
-
 def dsir_importance_resample(
     corpus: DataFrame,
     target: DataFrame,
@@ -748,10 +593,9 @@ def dsir_importance_resample(
     **100 TB amortization knobs** (the semantic_dedup ``assigned=``
     pattern): bucket-count models are tiny (B longs), ALGEBRAIC
     (counts sum), and independent of ``k``/``seed`` — a deployment
-    builds them once beside the corpus, maintains them incrementally
-    as batches land (:func:`dsir_bucket_counts` /
-    :func:`dsir_merge_counts`: merged == rebuilt exactly, pinned),
-    and INJECTS them via ``target_counts``/``corpus_counts`` so a
+    builds them once beside the corpus with :func:`dsir_bucket_counts`,
+    adds each landed batch's counts per bucket (merged == rebuilt
+    exactly), and INJECTS them via ``target_counts``/``corpus_counts`` so a
     resample run is scoring + top-k only — zero count passes. When
     injecting ``corpus_counts``, they must describe the FULL corpus
     the ``corpus`` frame presents (the smoothed q-model denominator
@@ -839,8 +683,8 @@ def dsir_importance_resample(
 # B-bucket model buys for a bounded, broadcastable artifact.
 #
 # Scale shape mirrors DSIR: the model is TWO B-long count tables
-# (build once on the clean split, algebraic — dsir_merge_counts
-# maintains them), folded into literal log-arrays on the driver;
+# (build once on the clean split, algebraic — batch counts add per
+# bucket), folded into literal log-arrays on the driver;
 # scoring is a map-only per-row fold — the corpus never shuffles.
 # ---------------------------------------------------------------------
 
@@ -854,8 +698,8 @@ def lm_bigram_counts(
     """Train the hashed bigram LM: (unigram_counts, bigram_counts)
     bucket dicts over the clean split, in ONE tagged pass (one
     explode, one partial agg keyed (kind, bucket), one bounded
-    pull). Counts are algebraic: maintain incrementally with
-    :func:`dsir_merge_counts`, exactly like the DSIR models."""
+    pull). Counts are algebraic: a batch's counts add per bucket,
+    exactly like the DSIR models."""
     toks = F.split(F.trim(F.col(text_col)), " ")
     n = F.size(toks)
     uni = F.transform(

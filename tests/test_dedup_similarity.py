@@ -119,6 +119,15 @@ def test_incremental_tombstones_keep_junk_cap_exact(spark, docs):
     assert tomb.count() > 0 and tomb.agg(F.max("w")).collect()[0][0] == 70
     incr = D.incremental_lsh_candidates(index, new, "id", "text")
     assert incr.count() == 0
+    # a tombstone stays dead even when its recorded width sits under
+    # the cap: the ids were discarded at capping, nothing can revive it
+    shrunk = index.withColumn(
+        "w",
+        F.when(F.col("ids").isNull(), F.lit(D.MAX_BUCKET - 4)).otherwise(
+            F.col("w")
+        ),
+    )
+    assert D.incremental_lsh_candidates(shrunk, new, "id", "text").count() == 0
     # sanity: the same two new docs against a small clean corpus pair up
     clean_index = D.band_bucket_index(docs([(0, junk[0][1])]), "id", "text")
     assert (
@@ -193,163 +202,6 @@ def test_merge_band_index_equals_rebuild_on_fixture(spark):
     )
     rebuilt = D.band_bucket_index(df, "id", "text")
     assert _index_as_set(merged) == _index_as_set(rebuilt)
-
-
-def test_remove_from_band_index_matches_rebuild(spark, docs):
-    near = "the quick brown fox jumps over the lazy dog by the river"
-    rows = (
-        [(i, near) for i in range(10)]
-        + [(50, "a unique document that stays in the corpus")]
-        + [(60, "another unique one that will be deleted entirely")]
-    )
-    df = docs(rows)
-    removed_ids = {3, 7, 60}
-    removed = df.filter(F.col("id").isin(*removed_ids))
-    survivors = df.filter(~F.col("id").isin(*removed_ids))
-    got = D.remove_from_band_index(
-        D.band_bucket_index(df, "id", "text"), removed, "id", "text"
-    )
-    rebuilt = D.band_bucket_index(survivors, "id", "text")
-    assert _index_as_set(got) == _index_as_set(rebuilt)
-    # and the shrunk index serves probes identically
-    probe = docs([(100, near)])
-    a = D.incremental_lsh_candidates(got, probe, "id", "text")
-    b = D.incremental_lsh_candidates(rebuilt, probe, "id", "text")
-    assert {(r.d1, r.d2) for r in a.collect()} == {
-        (r.d1, r.d2) for r in b.collect()
-    }
-
-
-def test_remove_keeps_fallen_tombstones_dead(spark, docs):
-    junk = "junk boilerplate text repeated in every one of these docs"
-    df = docs([(i, junk) for i in range(D.MAX_BUCKET + 6)])  # tombstoned
-    index = D.band_bucket_index(df, "id", "text")
-    assert index.filter(F.col("ids").isNull()).count() > 0
-    # delete 10 members: width falls UNDER the cap, but the ids were
-    # discarded at capping — the bucket must stay a tombstone (ids
-    # NULL, width decremented), still suppressing pair generation
-    removed = df.filter(F.col("id") < 10)
-    got = D.remove_from_band_index(index, removed, "id", "text")
-    rows = got.collect()
-    assert rows and all(r.ids is None for r in rows)
-    assert all(r.w == D.MAX_BUCKET - 4 for r in rows)
-    probe = docs([(500, junk), (501, junk)])
-    assert (
-        D.incremental_lsh_candidates(got, probe, "id", "text").count() == 0
-    )
-
-
-def test_ingest_batch_lifecycle(spark, docs):
-    near = "the quick brown fox jumps over the lazy dog by the river tonight"
-    old_rows = [
-        (1, near),
-        (2, "completely different old content about something else"),
-        # old doc with id ABOVE the batch range: the corpus must still
-        # win against batch doc 10 (membership, not id order)
-        (99, "shared boilerplate paragraph repeated in the next crawl also"),
-    ]
-    new_rows = [
-        (10, "shared boilerplate paragraph repeated in the next crawl also"),
-        (11, near + " again"),            # near-dup of old doc 1
-        (12, "a genuinely fresh document about a new topic entirely"),
-        (13, near + " again"),            # dup of batch peer 11 too
-    ]
-    old, new = docs(old_rows), docs(new_rows)
-    corpus = old.unionByName(new)
-    index = D.band_bucket_index(old, "id", "text")
-    admitted, dup_pairs, new_index = D.ingest_batch(
-        corpus, index, new, "id", "text", threshold=0.4
-    )
-    got = {r.id for r in admitted.collect()}
-    # 10 loses to old 99 (bigger id, still wins); 11 loses to old 1;
-    # 13 loses to peer 11 (pairwise min-id); 12 is fresh
-    assert got == {12}
-    evid = {(r.d1, r.d2) for r in dup_pairs.collect()}
-    assert (10, 99) in evid and (1, 11) in evid and (11, 13) in evid
-    # the merged index equals a rebuild over old + admitted
-    rebuilt = D.band_bucket_index(
-        old.unionByName(new.filter(F.col("id").isin(12))), "id", "text"
-    )
-    assert _index_as_set(new_index) == _index_as_set(rebuilt)
-
-
-def _fp_as_set(df):
-    return {(r.h, r.n, r.keep_id) for r in df.collect()}
-
-
-def test_fp_index_merge_and_remove_match_rebuild(spark, docs):
-    A, B, C = "doc alpha text", "doc beta text", "doc gamma text"
-    old = docs([(0, A), (1, A), (2, B), (9, C)])
-    batch = docs([(5, A), (6, "doc delta text"), (7, B)])
-    merged = D.merge_fp_index(
-        D.exact_duplicates(old, "id", "text"), batch, "id", "text"
-    )
-    rebuilt = D.exact_duplicates(old.unionByName(batch), "id", "text")
-    assert _fp_as_set(merged) == _fp_as_set(rebuilt)
-
-    # remove: drop one A-copy (not the rep), ALL of C (group empties),
-    # and B's representative id 2 (rep lost -> keep_id NULL, n right)
-    removed = docs([(1, A), (9, C), (2, B)])
-    shrunk = D.remove_from_fp_index(merged, removed, "id", "text")
-    survivors = old.unionByName(batch).filter(~F.col("id").isin(1, 9, 2))
-    expect = D.exact_duplicates(survivors, "id", "text")
-    got = {r.h: (r.n, r.keep_id) for r in shrunk.collect()}
-    want = {r.h: (r.n, r.keep_id) for r in expect.collect()}
-    assert got.keys() == want.keys()
-    for h, (n, keep) in want.items():
-        gn, gkeep = got[h]
-        assert gn == n, h
-        # B's group lost its stored representative: keep_id is NULL
-        # (reassign on rebuild); every other group matches exactly
-        assert gkeep == keep or gkeep is None, h
-    n_null = sum(1 for v in got.values() if v[1] is None)
-    assert n_null == 1
-
-
-def test_remove_unadmitted_doc_leaves_live_buckets_intact(spark, docs):
-    # a doc REJECTED at ingest still hashes to its near-dups' bucket
-    # keys; erasing it later must not corrupt the buckets of the docs
-    # that actually survive in the index
-    text = "the shared near duplicate content that collides in bands"
-    admitted = docs([(1, text), (2, text)])
-    index = D.band_bucket_index(admitted, "id", "text")
-    never_admitted = docs([(99, text)])
-    got = D.remove_from_band_index(index, never_admitted, "id", "text")
-    assert _index_as_set(got) == _index_as_set(index)
-    # and replaying a real removal is also harmless for live buckets
-    once = D.remove_from_band_index(index, docs([(2, text)]), "id", "text")
-    twice = D.remove_from_band_index(once, docs([(2, text)]), "id", "text")
-    assert _index_as_set(twice) == _index_as_set(once)
-
-
-def test_merge_fp_index_keeps_lost_representative_null(spark, docs):
-    text = "group text shared by several documents here"
-    old = docs([(5, text), (10, text)])
-    idx = D.exact_duplicates(old, "id", "text")
-    # erase the representative (id 5): keep_id becomes NULL
-    lost = D.remove_from_fp_index(idx, docs([(5, text)]), "id", "text")
-    assert lost.collect()[0].keep_id is None
-    # merging a batch copy must NOT elect the batch id (20) as the
-    # representative — surviving doc 10 is smaller and unknown to the
-    # index, so the marker stays NULL
-    merged = D.merge_fp_index(lost, docs([(20, text)]), "id", "text")
-    row = merged.collect()[0]
-    assert row.n == 2 and row.keep_id is None
-
-
-def test_incremental_exact_matches(spark, docs):
-    # corpus: two copies of A (keep_id=0), one B; batch: one more A
-    # (normalization applies), one new C
-    old = docs(
-        [(0, "Doc alpha  text"), (1, "doc ALPHA text"), (2, "doc beta text")]
-    )
-    index = D.exact_duplicates(old, "id", "text")
-    batch = docs([(10, "DOC  alpha TEXT"), (11, "doc gamma text")])
-    got = {
-        (r.id, r.keep_id, r.n_old)
-        for r in D.incremental_exact_matches(index, batch, "id", "text").collect()
-    }
-    assert got == {(10, 0, 2)}
 
 
 def test_minhash_signature_is_order_insensitive_set_hash(spark, docs):
@@ -1427,6 +1279,24 @@ def test_semantic_dedup_skips_size_probe_when_broadcast_disabled(spark):
         frame.unpersist()
     assert off == on
     assert sum(r.dropped for r in on) >= 1
+
+
+@pytest.mark.parametrize(
+    "setting, nbytes", [("1t", 2**40), ("10MB", 10485760), ("-1", 0)]
+)
+def test_auto_broadcast_bytes_reads_the_planners_threshold(
+    spark, setting, nbytes
+):
+    """Every size string Spark accepts reads as the byte count the
+    planner uses (``1t`` is 2**40 bytes); a disabled threshold reads
+    as 0."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, setting)
+    try:
+        assert D._auto_broadcast_bytes(spark) == nbytes
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_semantic_dedup_matches_numpy_model(spark):

@@ -68,60 +68,6 @@ def test_pack_chunk_spans_boundary(spark):
     assert out[3].first_chunk == 1 and out[3].last_chunk == 2
 
 
-def test_build_training_corpus_funnel(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from kaj_query_engine_spark.operators.pipeline import (
-        build_training_corpus,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far "
-        "away along the winding river path toward the old mill where "
-        "the miller waits with bread and salt for every traveler who "
-        "walks the road this season of the year under a pale sky and "
-        "rests a while beside the quiet water in the shade"
-    )
-    rows = (
-        [(i, base + f" tail{i}") for i in range(6)]  # near-dup family
-        + [(10, base), (11, base)]  # exact dups of each other
-        + [(20, "short")]  # fails the quality gate (< 50 words)
-        + [(30, "meanwhile in a different story a sailor charts the "
-            "coast and notes every lighthouse and every harbor town "
-            "in a worn logbook kept dry inside an oilskin wrap while "
-            "gulls argue over scraps on the deck and the first mate "
-            "hums an old tune about home and the turning tide with "
-            "the benchmark marker phrase inserted here for "
-            "contamination checks to find")]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    bench = spark.createDataFrame(
-        [(0, "the benchmark marker phrase inserted here for contamination")],
-        "doc_id long, text string",
-    )
-    out = str(tmp_path / "corpus")
-    manifest, funnel = build_training_corpus(
-        docs, "doc_id", "text", out, benchmarks=bench,
-        max_tokens=64, num_shards=2, max_records_per_file=50,
-    )
-    stages = dict(funnel)
-    assert stages["raw"] == 10
-    assert stages["quality_gate"] == 9          # doc 20 dropped
-    assert stages["exact_dedup"] == 8           # 10/11 collapse to 10
-    assert stages["near_dedup"] == 2  # family -> 1 rep, plus doc 30
-    assert stages["decontaminated"] == 1  # doc 30 contaminated
-    assert stages["packed_chunks"] == stages["decontaminated"]
-    # manifest totals match the packed output
-    m = manifest.agg(F.sum("n_rows"), F.sum("n_tokens")).collect()[0]
-    assert m[0] == stages["packed_chunks"]
-    back = spark.read.parquet(out)
-    assert back.count() == stages["packed_chunks"]
-    assert m[1] == back.agg(F.sum("_n_tok")).collect()[0][0]
-    # the shards carry the TRAINING CONTENT, not just packing metadata
-    assert "text" in back.columns
-    assert back.filter(F.col("text").isNull() | (F.length("text") == 0)).count() == 0
-
-
 def test_decontaminate_flags_overlap_and_scores(spark):
     """Doc 10 copies a benchmark passage (all shingles hit), doc 11
     shares one 3-gram, doc 12 is clean and must not appear."""
@@ -371,79 +317,18 @@ def test_dsir_matches_python_model_and_prefers_target_like(spark):
         )
 
 
-def test_build_training_corpus_dsir_stage(spark, tmp_path):
-    """Round 14: the optional domain-matching stage — DSIR importance
-    resampling slots between decontamination and packing (the paper's
-    placement: select from the cleaned pool). The funnel records it,
-    exactly dsir_k docs survive it, and the selection equals running
-    the operator standalone on the decontaminated survivors."""
-    from kaj_query_engine_spark.operators.pipeline import (
-        build_training_corpus,
-        dsir_importance_resample,
-    )
-
-    # docs must PASS the Gopher gate (>=50 words, >=2 stopwords, mean
-    # word length 3-10) and must NOT near-dup each other (per-doc
-    # unique tokens keep pairwise Jaccard ~ 0), while the two domains
-    # stay separable by their shared vocabulary
-    def mk(i, vocab):
-        w = []
-        for j in range(30):
-            w.append(vocab[(i * 5 + j) % len(vocab)])
-            w.append("the" if j % 3 == 0 else f"item{i}word{j}")
-        return (i, " ".join(w))
-
-    sci = "protein fold enzyme helix ribosome binding substrate".split()
-    junk = "winner lottery click prize casino jackpot offer".split()
-    docs = spark.createDataFrame(
-        [mk(i, sci) for i in range(10)]
-        + [mk(i, junk) for i in range(10, 20)],
-        "doc_id long, text string",
-    )
-    target = spark.createDataFrame(
-        [mk(100 + i, sci) for i in range(4)], "doc_id long, text string"
-    )
-    out = str(tmp_path / "corpus")
-    manifest, funnel = build_training_corpus(
-        docs, "doc_id", "text", out,
-        max_tokens=64, num_shards=2, max_records_per_file=50,
-        dsir_target=target, dsir_k=6,
-    )
-    stages = dict(funnel)
-    assert stages["dsir_matched"] == 6
-    assert stages["packed_chunks"] >= 6  # 60-token docs split at 64
-    # the composed stage == the standalone operator on the same pool
-    survivors = {
-        r.doc_id
-        for r in spark.read.parquet(out).select("doc_id").distinct().collect()
-    }
-    pool = docs  # every doc passes gate/dedup/decon here by design
-    assert stages["decontaminated"] == 20
-    want = {
-        r.id
-        for r in dsir_importance_resample(
-            pool, target, "doc_id", "text", k=6
-        ).collect()
-    }
-    assert survivors == want
-    # and the target-domain docs dominate the matched mix
-    assert sum(1 for i in survivors if i < 10) > sum(
-        1 for i in survivors if i >= 10
-    )
-
-
 def test_dsir_injected_counts_and_merge_rebuild_law(spark):
     """The DSIR amortization knobs (round 14): (a) bucket-count models
-    built incrementally over batches and merged with dsir_merge_counts
-    equal the from-scratch build EXACTLY (the merge==rebuild law);
-    (b) injecting the models via target_counts/corpus_counts
-    reproduces the self-counting run bit-for-bit (so a deployment's
-    maintained counts serve resamples with zero count passes); (c)
-    negated-batch removal reverses an ingest exactly."""
+    built over batches and summed per bucket equal the from-scratch
+    build EXACTLY (the merge==rebuild law); (b) injecting the models
+    via target_counts/corpus_counts reproduces the self-counting run
+    bit-for-bit (so a deployment's maintained counts serve resamples
+    with zero count passes)."""
+    from collections import Counter
+
     from kaj_query_engine_spark.operators.pipeline import (
         dsir_bucket_counts,
         dsir_importance_resample,
-        dsir_merge_counts,
     )
 
     def mk(i, vocab):
@@ -468,12 +353,7 @@ def test_dsir_injected_counts_and_merge_rebuild_law(spark):
     b2 = corpus.filter("doc_id >= 8 AND doc_id < 16")
     b3 = corpus.filter("doc_id >= 16")
     parts = [dsir_bucket_counts(b, "doc_id", "text", 64) for b in (b1, b2, b3)]
-    assert dsir_merge_counts(*parts) == full
-    # removal: fold a negated batch back out
-    neg = {b: -n for b, n in parts[2].items()}
-    assert dsir_merge_counts(full, neg) == dsir_merge_counts(
-        parts[0], parts[1]
-    )
+    assert dict(sum(map(Counter, parts), Counter())) == full
     # injected == self-counting, bit for bit
     tc = dsir_bucket_counts(target, "doc_id", "text", 64)
     kw = dict(k=8, n_buckets=64)

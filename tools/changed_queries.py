@@ -24,7 +24,9 @@ add entries, e.g. for data-fixture changes git can't see) can never
 silently under-cover the round's diff.
 
 Usage: python tools/changed_queries.py [git-range]
-Prints one line per derived query with the changed modules that pin it.
+Prints one line per derived query (symbol-granular, the set
+``_CHANGED_THIS_ROUND`` must cover) with the changed symbols that pin
+it, then the window budget the registry's pin lists spend.
 """
 
 from __future__ import annotations
@@ -199,15 +201,6 @@ def derive(rng: str | None = None) -> dict[str, list[str]]:
         )
         out[name] = sorted(out[name])
     return out
-
-
-if __name__ == "__main__":
-    rng = sys.argv[1] if len(sys.argv) > 1 else default_range()
-    print(f"# range: {rng}")
-    d = derive(rng)
-    for name, hits in sorted(d.items()):
-        print(f"{name}: {', '.join(hits)}")
-    print(f"# {len(d)} derived-changed queries")
 
 
 # ---------------------------------------------------------------------
@@ -547,3 +540,34 @@ def derive_fine(rng: str | None = None) -> dict[str, list[str]]:
         )
         out[name] = sorted(out[name])
     return out
+
+
+WINDOW = 50  # the externally-checked prefix of the registry's order
+
+
+def window_budget() -> str:
+    """One line: the window slots the registry's two pin lists spend."""
+    sys.path.insert(0, str(REPO))
+    from kaj_query_engine_spark.workload.registry import (
+        _CHANGED_THIS_ROUND,
+        _STALEST,
+        _VERIFY_PRIORITY,
+    )
+
+    changed, stale = len(_CHANGED_THIS_ROUND), len(_STALEST)
+    overlap = len(set(_CHANGED_THIS_ROUND) & set(_STALEST))
+    used = len(_VERIFY_PRIORITY)
+    return (
+        f"# window: {changed} changed + {stale} stale - {overlap} overlap"
+        f" = {used} of {WINDOW}, {WINDOW - used} free"
+    )
+
+
+if __name__ == "__main__":
+    rng = sys.argv[1] if len(sys.argv) > 1 else default_range()
+    print(f"# range: {rng}")
+    d = derive_fine(rng)
+    for name, hits in sorted(d.items()):
+        print(f"{name}: {', '.join(hits)}")
+    print(f"# {len(d)} derived-changed queries")
+    print(window_budget())
