@@ -36,18 +36,8 @@ from kaj_query_engine_spark.functions.text import (
     shingles_of_tokens,
     tokens,
 )
+from kaj_query_engine_spark.session import broadcast_threshold_bytes
 
-
-def _auto_broadcast_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (0 when
-    broadcast is disabled) — the same size authority the planner
-    itself consults, so the semantic-dedup pair join's broadcast
-    decision below follows the session's policy instead of a magic
-    constant. Read parsed from the session's SQLConf, so every size
-    string Spark accepts (``1t``, ``2tb``, ``10MB``) means what it
-    means to the planner."""
-    conf = spark._jsparkSession.sessionState().conf()
-    return max(0, conf.autoBroadcastJoinThreshold())
 
 # LSH defaults: 12 hashes = 4 bands x 3 rows → candidate threshold
 # (1/B)^(1/R) ≈ 0.63 Jaccard.
@@ -137,43 +127,33 @@ def minhash_salts(num_hashes: int = NUM_HASHES) -> list[int]:
     return [rng.getrandbits(60) for _ in range(num_hashes)]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = NUM_HASHES,
-    n: int = 3,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, s0..s{K-1}) int64 minhash signature per document.
 
     One explode + ONE md5 per shingle (K hashes derived by XOR salt) +
     one groupBy(id) with K min-aggregates — partial aggregation keeps
     the shuffle at |docs| x K longs regardless of document length.
     """
-    sh = shingle_table(df, id_col, text_col, n)
+    sh = shingle_table(df, id_col, text_col)
     base = F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
     aggs = [
         F.min(base.bitwiseXOR(F.lit(salt))).alias(f"s{k}")
-        for k, salt in enumerate(minhash_salts(num_hashes))
+        for k, salt in enumerate(minhash_salts())
     ]
     return sh.groupBy("id").agg(*aggs)
 
 
-def lsh_bands(
-    sigs: DataFrame,
-    num_bands: int = NUM_BANDS,
-    rows_per_band: int = ROWS_PER_BAND,
-) -> DataFrame:
+def lsh_bands(sigs: DataFrame) -> DataFrame:
     """Melt signatures into (id, band, key): key = md5 of the band's
     signature slice."""
     band_cols = []
-    for b in range(num_bands):
-        parts = [F.col(f"s{b * rows_per_band + j}") for j in range(rows_per_band)]
+    for b in range(NUM_BANDS):
+        parts = [F.col(f"s{b * ROWS_PER_BAND + j}") for j in range(ROWS_PER_BAND)]
         band_cols.append(F.md5(F.concat_ws("|", *parts)).alias(f"b{b}"))
     with_bands = sigs.select("id", *band_cols)
-    stack = ", ".join(f"{b}, b{b}" for b in range(num_bands))
+    stack = ", ".join(f"{b}, b{b}" for b in range(NUM_BANDS))
     return with_bands.select(
-        "id", F.expr(f"stack({num_bands}, {stack}) AS (band, key)")
+        "id", F.expr(f"stack({NUM_BANDS}, {stack}) AS (band, key)")
     )
 
 
@@ -1244,7 +1224,7 @@ def _semantic_dedup_variants(
     # plan and remains byte-identical in output; pair multisets are
     # unordered either way (the rollup is the only consumer). The size
     # probe is an eager job, so it runs only when broadcast is enabled.
-    bthr = _auto_broadcast_bytes(vecs.sparkSession)
+    bthr = broadcast_threshold_bytes(vecs.sparkSession)
     if bthr > 0:
         st = m.select(
             F.count(F.lit(1)).alias("n"), F.max(F.size("q")).alias("d")

@@ -301,10 +301,9 @@ def resize_decoded_media(
     bin_col: str = "media",
 ) -> DataFrame:
     """Resize through the REAL codec: decode PNG → nearest-neighbor
-    sample (the same floor index math as :func:`resize_media`'s fake
-    path: yi = i·H//T) → re-encode PNG. Output (id, media, media_meta)
-    — the decoded-for-real twin of :func:`resize_media`, exercising
-    encoder and decoder once more per row.
+    sample (floor index math: yi = i·H//T) → re-encode PNG. Output
+    (id, media, media_meta), exercising encoder and decoder once more
+    per row.
     """
     import numpy as np
 
@@ -394,100 +393,6 @@ def _entropy(b: bytes) -> float:
         counts[x] = counts.get(x, 0) + 1
     n = len(b)
     return round(-sum(c / n * math.log2(c / n) for c in counts.values()), 6)
-
-
-def media_checksum(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "media"
-) -> DataFrame:
-    """Content checksum of the raw bytes — mapInPandas + hashlib,
-    the dedup key for binary media (exact dedup joins on this)."""
-    schema = f"{id_col} long, media_sha string"
-
-    def digest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "media_sha": pdf[bin_col].map(
-                        lambda b: hashlib.sha256(b).hexdigest()
-                    ),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(digest, schema)
-
-
-def resize_media(
-    df: DataFrame,
-    target_w: int,
-    target_h: int,
-    id_col: str = "doc_id",
-    bin_col: str = "media",
-    meta_col: str = "media_meta",
-) -> DataFrame:
-    """Resize stage — the full Spark-side plumbing (Arrow
-    ``mapInPandas`` batches, per-row pixel-buffer transform, metadata
-    rewrite), decode-free: real codecs are absent in this container
-    (see :func:`decode_media`), so the pixel buffer comes from the
-    deterministic FAKE pixel model ``pixel(i, j) = payload[(i·W + j)
-    mod len]`` and resizing is numpy nearest-neighbor index sampling.
-    Swapping the fake expansion for a codec decode + PIL resize
-    changes ONE function body; the batch shape, schema contract, and
-    metadata handling are exactly what the real stage needs.
-
-    Output: (id, media = target_h·target_w bytes, media_meta with the
-    new dimensions, format preserved).
-    """
-    import numpy as np
-
-    flat = df.select(
-        id_col,
-        bin_col,
-        F.col(f"{meta_col}.width").alias("_w"),
-        F.col(f"{meta_col}.height").alias("_h"),
-        F.col(f"{meta_col}.format").alias("_fmt"),
-    )
-    schema = f"{id_col} long, {bin_col} binary, _fmt string"
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(payload: bytes, w: int, h: int) -> bytes:
-            buf = np.frombuffer(payload, dtype=np.uint8)
-            # degenerate rows (empty payload OR zero-area metadata)
-            # zero-fill instead of crashing the task: a 0-width grid
-            # would make the nearest-neighbor index math go out of
-            # bounds even with a non-empty payload
-            if buf.size == 0 or w <= 0 or h <= 0:
-                return b"\x00" * (target_w * target_h)
-            # fake decode: expand payload onto the H×W grid
-            grid = buf[
-                (np.arange(h)[:, None] * w + np.arange(w)[None, :]) % buf.size
-            ]
-            yi = np.arange(target_h) * h // target_h
-            xi = np.arange(target_w) * w // target_w
-            return grid[np.ix_(yi, xi)].tobytes()
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    bin_col: [
-                        one(b, w, h)
-                        for b, w, h in zip(pdf[bin_col], pdf["_w"], pdf["_h"])
-                    ],
-                    "_fmt": pdf["_fmt"],
-                }
-            )
-
-    out = flat.mapInPandas(resize, schema)
-    return out.select(
-        id_col,
-        bin_col,
-        F.struct(
-            F.lit(target_w).cast("int").alias("width"),
-            F.lit(target_h).cast("int").alias("height"),
-            F.col("_fmt").alias("format"),
-        ).alias(meta_col),
-    )
 
 
 def frame_sample(
@@ -1326,66 +1231,6 @@ def attach_gif_media(
             (F.lit(12) + (F.col(id_col) % 3) * 6).cast("int").alias("height"),
             F.lit("gif").alias("format"),
         ),
-    )
-
-
-def normalize_media(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "media"
-) -> DataFrame:
-    """Media normalization: decode WHATEVER still-image codec each
-    payload uses (PNG, baseline JPEG, or GIF — sniffed by magic, the
-    decode_media contract) and re-encode everything as PNG, the
-    canonical lossless interchange form a mixed-format corpus is
-    normalized to before training. Output (id, media, media_meta)
-    with format='png' for every row.
-
-    Grayscale sources stay (H, W); palette/RGB sources stay
-    (H, W, 3) — PNG carries both natively. One Arrow pass, map-only;
-    unsupported codecs raise per-task like every decode operator here.
-    """
-    import numpy as np
-
-    from kaj_query_engine_spark.functions.gif import decode_gif
-    from kaj_query_engine_spark.functions.jpeg import decode_jpeg
-    from kaj_query_engine_spark.functions.png import decode_png, encode_png
-
-    schema = f"{id_col} long, {bin_col} binary, width int, height int"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def one(b: bytes) -> tuple[bytes, int, int]:
-            raw = bytes(b)
-            if raw[:2] == b"\xff\xd8":
-                _h, _w, px, _co = decode_jpeg(raw)
-            elif raw[:4] == b"GIF8":
-                px = decode_gif(raw)
-            elif raw[:8] == b"\x89PNG\r\n\x1a\n":
-                px = decode_png(raw)
-            else:
-                raise NotImplementedError(
-                    "normalize_media: unsupported codec (PNG/JPEG/GIF "
-                    "decode here; no libraries for others) — filter on "
-                    "media_meta.format upstream"
-                )
-            return encode_png(np.ascontiguousarray(px)), px.shape[1], px.shape[0]
-
-        for pdf in batches:
-            enc = pdf[bin_col].map(one)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    bin_col: enc.map(lambda t: t[0]),
-                    "width": enc.map(lambda t: t[1]).astype("int32"),
-                    "height": enc.map(lambda t: t[2]).astype("int32"),
-                }
-            )
-
-    out = df.select(id_col, bin_col).mapInPandas(run, schema)
-    return out.select(
-        id_col,
-        bin_col,
-        F.struct(
-            F.col("width"), F.col("height"), F.lit("png").alias("format")
-        ).alias("media_meta"),
     )
 
 

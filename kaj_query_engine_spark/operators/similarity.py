@@ -503,47 +503,6 @@ def ivf_query(
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_centroids: int | None = None,
-    nprobe: int | None = None,
-    target_list: int = 1024,
-) -> DataFrame:
-    """IVF-flat approximate top-k: (q_id, vec_id, rank, cos) — same
-    output shape as :func:`brute_force_topk` / :func:`lsh_topk`.
-
-    The third ANN path: an inverted-file index. Each corpus vector is
-    assigned to its nearest coarse centroid (its "list"); a query
-    scores only the vectors in its ``nprobe`` nearest lists. Unlike
-    LSH, list sizes adapt to the data distribution — dense regions get
-    split across nearby centroids rather than piling into one bucket.
-
-    Convenience composition of :func:`ivf_build` + :func:`ivf_query`
-    for one-shot use; a repeated-query deployment calls build once,
-    materializes ``assigned`` partitioned by cid, and serves with
-    ivf_query only (see ivf_build's scale note).
-
-    .. note:: CHANGED DEFAULT (round 3): when ``nprobe`` is None,
-       ivf_query probes ``isqrt(n_centroids)`` lists, not the previous
-       ``n_centroids // 4`` — at K=100 that is 10 lists instead of 25,
-       i.e. lower recall but a scanned *fraction* that shrinks as the
-       index grows (K/4 pins it at 25% of the corpus forever, a
-       non-starter at 100 TB). Callers that relied on the old recall
-       level should pass ``nprobe`` explicitly.
-
-    Determinism: centroid choice is the md5 seed sample
-    (:func:`ivf_centroids`), assignment/probe ranking breaks cosine
-    ties by centroid id, and all dot products are order-fixed
-    left-folds — every double matches the DuckDB oracle bit-for-bit.
-    """
-    cent, assigned = ivf_build(corpus, id_col, vec_col, n_centroids, target_list)
-    return ivf_query(cent, assigned, queries, id_col, vec_col, k, nprobe)
-
-
 def quantize_vectors(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -727,21 +686,6 @@ def pack_qvecs(df: DataFrame, qvec_col: str = "qvec") -> DataFrame:
         return s.map(lambda a: np.asarray(a, dtype=np.int8).tobytes())
 
     return df.withColumn(qvec_col, pack(F.col(qvec_col)))
-
-
-def unpack_qvecs(df: DataFrame, qvec_col: str = "qvec") -> DataFrame:
-    """Inverse of :func:`pack_qvecs`: BINARY → array<long>."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def unpack(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return s.map(
-            lambda b: np.frombuffer(b, dtype=np.int8).astype(np.int64).tolist()
-        )
-
-    return df.withColumn(qvec_col, unpack(F.col(qvec_col)))
 
 
 def band_hyperplanes(

@@ -1,15 +1,11 @@
-"""Skew mitigation: salted aggregation and salted joins.
+"""Skew mitigation: salted aggregation.
 
-AQE's skew-join splitting (`session.py` turns it on) handles most
+AQE's skew-join splitting (`session.py` turns it on) handles join
 skew at runtime by splitting oversized shuffle partitions. Salting is
-the *plan-level* complement for the cases AQE can't fix:
-
-- a hot GROUP BY key whose single reducer becomes the straggler
-  (AQE can split a partition, not a key);
-- a broadcast-ineligible join with a few pathological keys.
-
-Both helpers keep results exactly equal to the unsalted plan — the
-salt only changes physical distribution.
+the *plan-level* complement for the case AQE can't fix: a hot GROUP BY
+key whose single reducer becomes the straggler (AQE can split a
+partition, not a key). The result equals the unsalted plan exactly —
+the salt only changes physical distribution.
 """
 
 from __future__ import annotations
@@ -46,39 +42,3 @@ def salted_groupby_agg(
     return partials.groupBy(*keys).agg(
         *[f(F.col(f"_p_{name}")).alias(name) for _p, f, name in aggs]
     )
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the LEFT side's hot keys spread across
-    ``salt_buckets`` partitions; the RIGHT side is replicated
-    ``salt_buckets``× (explode) so every salted left row still meets
-    its matches.
-
-    Use when the right side is too big to broadcast but small enough
-    to replicate B× — i.e., skew concentrated on the left. Join key
-    becomes (key, salt): no reducer receives more than ~1/B of a hot
-    key.
-
-    Only ``inner``/``left``/``left_semi``/``left_anti`` preserve the
-    unsalted result: any right-preserving join would emit each right
-    replica's unmatched row B times.
-    """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join supports left-preserving joins only, got {how!r}"
-        )
-    salted_left = left.withColumn(
-        "_salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    replicated_right = right.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
-    )
-    out = salted_left.join(replicated_right, [key, "_salt"], how)
-    return out.drop("_salt")

@@ -78,3 +78,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def broadcast_threshold_bytes(spark: SparkSession) -> int:
+    """The session's autoBroadcastJoinThreshold in bytes, 0 when
+    broadcast is disabled — read parsed from the session's SQLConf,
+    the value the planner itself consults, so every size string Spark
+    accepts (``1t``, ``2tb``, ``10MB``) means what it means there."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return max(0, conf.autoBroadcastJoinThreshold())

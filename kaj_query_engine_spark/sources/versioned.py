@@ -55,20 +55,18 @@ single-writer maintenance job needs:
     ``n_buckets=8``.
 
   ``n_buckets`` itself is versioned PER MANIFEST (Iceberg's
-  partition-spec-evolution rule): :meth:`rebucket` rewrites the
-  current snapshot under a new bucket count as a compaction variant,
-  old versions stay time-travelable under the spec they were written
-  with, and a crashed rebucket leaves the table on the old spec
-  because the spec rides in the manifest whose atomic creation IS
-  the commit. At a scale where one full rewrite per spec change
-  is too large a unit, the spec also evolves LAZILY (the real
-  formats' rule): :meth:`start_rebucket` is a metadata-only commit
-  that retargets future writes and tags every existing file with the
-  spec its bucket id was written under (``nb`` per manifest entry);
-  reads and keyed commits prune each file under ITS OWN spec
-  throughout, keyed traffic migrates its touched files organically,
-  and :meth:`rebucket_step` moves a bounded chunk of old-spec buckets
-  per resumable commit until :meth:`migration` reports none pending.
+  partition-spec-evolution rule): old versions stay time-travelable
+  under the spec they were written with, and a crashed spec change
+  leaves the table on the old spec because the spec rides in the
+  manifest whose atomic creation IS the commit. The spec evolves
+  LAZILY (the real formats' rule): :meth:`start_rebucket` is a
+  metadata-only commit that retargets future writes and tags every
+  existing file with the spec its bucket id was written under (``nb``
+  per manifest entry); reads and keyed commits prune each file under
+  ITS OWN spec throughout, keyed traffic migrates its touched files
+  organically, and :meth:`rebucket_step` moves a bounded chunk of
+  old-spec buckets per resumable commit until :meth:`migration`
+  reports none pending.
 
 - **Readers never see a torn table.** Data files are written
   completely, THEN the version manifest is hard-linked into place —
@@ -141,11 +139,11 @@ chunks. Measured on the probe's own growth table
 (``versioned_commit_bytes_fixed_delta``): quiet at 1×/4×/16× and
 fires 8→16 at the 64× point where keyed metadata read 13.8 KB —
 the trigger lands exactly where the curve does. Selective readers
-(:meth:`read_buckets`, :meth:`commit_keyed`, :meth:`migration`,
-:meth:`maybe_compact`) parse only the shards whose bucket can hold a
-touched key, and :meth:`vacuum` reference-counts shard files exactly
-like data files. Whole-table consumers see the merged flat view
-through :meth:`manifest`, unchanged.
+(:meth:`read_buckets`, :meth:`commit_keyed`, :meth:`migration`)
+parse only the shards whose bucket can hold a touched key, and
+:meth:`vacuum` reference-counts shard files exactly like data files.
+Whole-table consumers see the merged flat view through
+:meth:`manifest`, unchanged.
 """
 
 from __future__ import annotations
@@ -162,6 +160,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from kaj_query_engine_spark.session import broadcast_threshold_bytes
 
 
 class TouchedInfo(NamedTuple):
@@ -237,22 +237,8 @@ def _next_pow2(x: int) -> int:
 def _broadcast_key_cap(spark: SparkSession) -> int:
     """How many distinct touched keys may ride a broadcast join,
     derived from the session's own autoBroadcastJoinThreshold at a
-    conservative ~64 bytes/key row. ≤0 (broadcast disabled) → 0."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if raw.endswith(suf):
-            mult, raw = m, raw[: -len(suf)]
-            break
-    try:
-        nbytes = int(float(raw)) * mult
-    except ValueError:
-        nbytes = 10 * 1024 * 1024
+    conservative ~64 bytes/key row. Broadcast disabled → 0."""
+    nbytes = broadcast_threshold_bytes(spark)
     if nbytes <= 0:
         return 0
     return max(1_000, nbytes // 64)
@@ -417,7 +403,7 @@ class VersionedTable:
     @property
     def n_buckets(self) -> int | None:
         """The CURRENT version's bucket count: the spec is versioned
-        per manifest (``rebucket`` evolves it; old manifests keep the
+        per manifest (``start_rebucket`` evolves it; old manifests keep the
         spec their files were written under), falling back to the
         init-time table meta for manifests predating spec recording."""
         return self._n_buckets_at(None)
@@ -531,12 +517,12 @@ class VersionedTable:
     #   with ZERO metadata read or written for it. Keyed commits,
     #   appends, and migration steps pay O(touched shards) metadata,
     #   not O(live files).
-    # * selective readers (commit_keyed / read_buckets / migration /
-    #   maybe_compact) work from the shard entries' recorded
-    #   (kb, nb, n_files, bytes) summaries and load only the shards
-    #   whose bucket can hold a touched key; full readers
-    #   (:meth:`manifest`) merge every shard transparently, so all
-    #   whole-table consumers see the flat ``files`` view unchanged.
+    # * selective readers (commit_keyed / read_buckets / migration)
+    #   work from the shard entries' recorded (kb, nb, n_files, bytes)
+    #   summaries and load only the shards whose bucket can hold a
+    #   touched key; full readers (:meth:`manifest`) merge every shard
+    #   transparently, so all whole-table consumers see the flat
+    #   ``files`` view unchanged.
     # * a shard entry's ``nb`` tag IS the spec of its files (injected
     #   into each file entry on load), which makes
     #   :meth:`start_rebucket` literally metadata-only: it rewrites
@@ -637,7 +623,7 @@ class VersionedTable:
             man["files"] = files
         if n_buckets is not None:
             # the bucket spec this version's files were written under —
-            # versioned per manifest so rebucket() can evolve it while
+            # versioned per manifest so start_rebucket can evolve it while
             # older versions stay readable/prunable under their own
             man["n_buckets"] = n_buckets
         if keyed is not None:
@@ -980,7 +966,6 @@ class VersionedTable:
         *,
         cdf: dict | None = None,
         rows_hint: int | None = None,
-        new_n_buckets: int | None = None,
     ) -> int:
         """Full-snapshot commit: write ``df`` completely as the next
         version's data files, then move the pointer. O(table) by
@@ -999,10 +984,7 @@ class VersionedTable:
         known row count — compaction passes the manifest's recorded
         sum) the split is sized up front; without it, oversized files
         are re-split from the written data after the fact (zero extra
-        jobs when the table is small). ``new_n_buckets`` is
-        :meth:`rebucket`'s hook — the spec change rides in this
-        commit's manifest so its atomic creation publishes files
-        and spec together."""
+        jobs when the table is small)."""
         cur = self.current_version()
         if cur is None:
             return self.init(df, batch_id)
@@ -1010,11 +992,7 @@ class VersionedTable:
         sub_bits = 0
         nb = None
         if self.is_bucketed:
-            nb = (
-                new_n_buckets
-                if new_n_buckets is not None
-                else self._n_buckets_at(self._manifest_lite(cur))
-            )
+            nb = self._n_buckets_at(self._manifest_lite(cur))
             if rows_hint is not None:
                 sub_bits = self._sub_bits_for(rows_hint / max(nb, 1))
         files = self._write_data(df, nxt, n_buckets=nb, sub_bits=sub_bits)
@@ -1418,7 +1396,7 @@ class VersionedTable:
             # pruning stats like every other write — without them
             # (round-10 review) one touched stray's survivors were
             # re-read and re-written by EVERY later keyed commit, and
-            # the missing rows entry cost compact/rebucket their
+            # the missing rows entry cost compact its
             # rows_hint (forcing the two-phase re-split)
             stray_out = _survivors(stray_files).withColumn(
                 _KH, self._kh_expr()
@@ -1994,7 +1972,7 @@ class VersionedTable:
     def _manifest_rows(self) -> int | None:
         """Total recorded rows of the current version, or None when any
         file predates row recording — the free rows_hint for rewrites
-        of the current snapshot (compact/rebucket)."""
+        of the current snapshot (compact)."""
         rows = 0
         for f in self.manifest()["files"]:
             r = f.get("rows")
@@ -2002,37 +1980,6 @@ class VersionedTable:
                 return None
             rows += r
         return rows
-
-    def rebucket(self, spark: SparkSession, n_buckets: int) -> int:
-        """Evolve the bucket count WITHOUT destroying history — the
-        compaction variant the round-9 review asked for, so a table
-        that outgrows its init-time ``n_buckets`` regains bounded
-        buckets online (Iceberg's partition-spec evolution, reduced to
-        the hash-bucket case). This is the EAGER variant: it rewrites
-        the CURRENT snapshot under the new spec as ONE full-snapshot
-        commit (O(table), amortized like any compaction); at a scale
-        where one full rewrite per spec change is too large a unit,
-        use :meth:`start_rebucket` + :meth:`rebucket_step` — the lazy
-        path whose commits are bounded by a bucket chunk. The new
-        manifest records the new spec, older manifests keep theirs,
-        and the atomic manifest creation publishes files+spec together
-        — a crash mid-rebucket leaves the table fully on the old spec.
-        Logically changeless (feed reads through); the applied-batch
-        marker carries forward for the same reason :meth:`compact`'s
-        does."""
-        if not self.is_bucketed:
-            raise ValueError(
-                f"rebucket needs a bucketed table: {self.path}"
-            )
-        if n_buckets < 1:
-            raise ValueError("n_buckets must be >= 1")
-        return self.commit(
-            self.read(spark),
-            batch_id=self.last_applied_batch(),
-            cdf={"mode": "empty"} if self.has_change_feed else None,
-            rows_hint=self._manifest_rows(),
-            new_n_buckets=n_buckets,
-        )
 
     def start_rebucket(self, n_buckets: int) -> int:
         """Begin LAZY bucket-spec evolution to ``n_buckets`` — a
@@ -2320,45 +2267,6 @@ class VersionedTable:
             for f in self.manifest(version)["files"]
             if f["kb"] is None
         )
-
-    def maybe_compact(
-        self,
-        spark: SparkSession,
-        *,
-        max_stray_fraction: float = 0.25,
-        max_files: int | None = None,
-    ) -> int | None:
-        """Compact WHEN WARRANTED, else do nothing: triggers when
-        stray bytes exceed ``max_stray_fraction`` of the table (every
-        keyed commit re-reads all strays, so their cost is paid per
-        batch until folded) or the file count exceeds ``max_files``.
-        Returns the new version or None — the background OPTIMIZE
-        policy a streaming-ingested table runs between batches,
-        reduced to a threshold check the caller can afford every
-        commit (metadata-only: sizes come from the manifest's shard
-        entries — on a sharded manifest the check parses NO shard at
-        all, O(shard entries) per call).
-        """
-        man = self._manifest_lite()  # ONE small metadata load per check
-        total = stray = n_files = 0
-        if "shards" in man:
-            for s in man["shards"]:
-                total += s["bytes"]
-                n_files += s["n_files"]
-                if s.get("kb") is None:
-                    stray += s["bytes"]
-        else:
-            for f in man["files"]:
-                b = self._file_bytes(f)
-                total += b
-                n_files += 1
-                if self.is_bucketed and f["kb"] is None:
-                    stray += b
-        if (total and stray / total > max_stray_fraction) or (
-            max_files is not None and n_files > max_files
-        ):
-            return self.compact(spark)
-        return None
 
 
 def apply_change_feed(

@@ -52,9 +52,9 @@ def register(
 # rotation must never be able to hide a regression):
 #
 #   RULE 1 — any query whose implementation, or whose underlying
-#   operator/source code, changed in the CURRENT round is pinned into
-#   the checked window.  Changes and their external check land in the
-#   same round; rotation can never move a modified query out of view.
+#   operator/source code, changed in the CURRENT change is pinned into
+#   the checked window.  A change and its external check land
+#   together; rotation can never move a modified query out of view.
 #   RULE 2 — remaining slots go stalest-first: queries whose last
 #   external correctness row is oldest come before recently-verified
 #   veterans, so no query goes more than ~2 rounds unchecked.
@@ -63,49 +63,43 @@ def register(
 # verification attention only, never a behavior change.
 
 # RULE 1 is MECHANICALLY DERIVED: ``tools/changed_queries.py`` maps
-# the round's git diff (since the driver's last ``round N:`` commit,
-# working tree included) to changed queries, and
+# the diff of the change under review against its parent (the newest
+# ``PR N:`` / ``re-anchor`` / ``round N:`` commit below it, working
+# tree included) to changed queries, and
 # ``tests/test_registry_rotation.py`` pins this list ⊇ the derived
 # set — an under-maintained hand list FAILS pytest instead of
-# silently starving a changed query of its external check.
+# silently starving a changed query of its external check. Each change
+# replaces the list with its own pins, so earlier changes' pins do not
+# pile up in the window.
 #
-# Pins since round 15 (derive_fine output; the rotation pytest
+# Pins of this change (derive_fine output; the rotation pytest
 # enforces the superset). Most are conservative neighbour pins: a
 # deleted helper's hunk is attributed to the symbol at its splice
 # point, and a docstring edit pins its whole module.
 _CHANGED_THIS_ROUND = [
-    "q12_semantic_dedup",  # size probe skipped when broadcast is off
-    "q80_stream_windows",  # streaming/ops: transformWithState twin
-    "q81_stream_late_data",  # removed, docstrings updated
-    "q82_stream_dedup",
-    "q83_stream_stateful_totals",
-    "q84_stream_stream_join",
+    "q19_bucket_evolution",  # versioned: key cap reads the session's
+    "q33_table_time_travel",  # parsed broadcast threshold; the eager
+    "q55_merge_upsert",  # spec change and gated compaction deleted
+    "q66_merge_evolve",
     "q85_stream_merge",
     "q86_stream_scd2",
     "q87_stream_agg_state",
     "q89_stream_join_view",
-    "q90_media_pipeline",
-    "q01_scan",  # catalog: load_tables deleted after load_fixture_catalog
-    "q02_select_distinct_orderby",
-    "q03_agg_witness",
-    "q07_join4",
-    "q10_theta_join",
-    "q61_ann_lsh",  # similarity: cosine deleted before hyperplane_signs
-    "q62_embedding_neardup",
-    "q40_text_stats",  # pipeline: gram_arrays deleted; workload/text doc
-    "q43_temperature_mix",
-    "q21_html_extract",  # workload/text module docstring
-    "q41_bpe_tokenizer",
-    "q46_profile_topk",  # functions/text: quality_score/avg_token_len
-    "q48_decontaminate",  # functions/text: word_shingles deleted
+    "q12_semantic_dedup",  # dedup: threshold reader moved to session
+    "q50_dedup_exact",  # dedup: minhash/LSH parameters folded
+    "q51_minhash_lsh",
     "q52_ngram_jaccard",
-    "q54_dedup_clusters",  # dedup: partition-local union-find clustering
-    "q47_training_mix",  # pipeline: corpus builder and DSIR count
-    "q49_doc_chunks",  # merger deleted, default_rate folded
-    "q51_minhash_lsh",  # dedup: test-only index entry points deleted,
-    "q53_simhash",  # one-value parameters folded into constants
+    "q53_simhash",
+    "q54_dedup_clusters",
     "q64_pagerank",
     "q68_span_dedup",
+    "q69_span_decontaminate",
+    "q82_stream_dedup",
+    "q37_salted_agg",  # skew: the salted join deleted
+    "q62_embedding_neardup",  # similarity: the qvec unpacker and the
+    "q63_ann_ivf",  # one-shot IVF wrapper deleted
+    "q90_media_pipeline",  # multimodal: checksum/resize/normalize
+    "q93_codec_decode",  # deleted
 ]
 
 # Stalest-first (RULE 2): the 31 queries OUTSIDE round 15's 50-query

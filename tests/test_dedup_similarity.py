@@ -368,7 +368,9 @@ def test_ivf_topk_single_list_is_exact(spark, vectors):
     so IVF degenerates to the brute-force result exactly."""
     df, _ = vectors
     queries = df.filter(F.col("vec_id") < 3)
-    ivf = S.ivf_topk(df, queries, k=5, n_centroids=1, nprobe=1).collect()
+    ivf = S.ivf_query(
+        *S.ivf_build(df, n_centroids=1), queries, k=5, nprobe=1
+    ).collect()
     brute = S.brute_force_topk(df, queries, k=5).collect()
     key = lambda r: (r.q_id, r.rank)
     assert sorted([(r.q_id, r.rank, r.vec_id) for r in ivf]) == sorted(
@@ -385,7 +387,9 @@ def test_ivf_topk_scores_are_exact_and_recall_reasonable(spark, vectors):
     true top-5."""
     df, _ = vectors
     queries = df.filter(F.col("vec_id") < 3)
-    ivf = S.ivf_topk(df, queries, k=5, n_centroids=6, nprobe=3).collect()
+    ivf = S.ivf_query(
+        *S.ivf_build(df, n_centroids=6), queries, k=5, nprobe=3
+    ).collect()
     brute = S.brute_force_topk(df, queries, k=1000)
     exact = {(r.q_id, r.vec_id): r.cos for r in brute.collect()}
     true5 = {
@@ -404,7 +408,7 @@ def test_ivf_topk_auto_sizing(spark, vectors):
     (sqrt-N) and still returns well-formed exact-scored rows."""
     df, _ = vectors
     queries = df.filter(F.col("vec_id") < 2)
-    out = S.ivf_topk(df, queries, k=3).collect()
+    out = S.ivf_query(*S.ivf_build(df), queries, k=3).collect()
     assert len(out) > 0
     exact = {
         (r.q_id, r.vec_id): r.cos
@@ -455,9 +459,12 @@ def test_quantize_roundtrip_and_bounds(spark, vectors):
     )
     # every vector's max-|component| quantizes to ±127 exactly
     assert all(max(abs(x) for x in r.qvec) == 127 for r in rows if r.scale > 0)
-    # pack → parquet → unpack is identity
+    # the packed blob is one int8 byte per component
     packed = S.pack_qvecs(qv)
-    back = {r.vec_id: r.qvec for r in S.unpack_qvecs(packed).collect()}
+    back = {
+        r.vec_id: np.frombuffer(r.qvec, np.int8).tolist()
+        for r in packed.collect()
+    }
     for r in rows:
         assert back[r.vec_id] == r.qvec
 
@@ -1289,12 +1296,18 @@ def test_auto_broadcast_bytes_reads_the_planners_threshold(
 ):
     """Every size string Spark accepts reads as the byte count the
     planner uses (``1t`` is 2**40 bytes); a disabled threshold reads
-    as 0."""
+    as 0. The versioned table's broadcast key cap (~64 bytes a key)
+    reads the same value."""
+    from kaj_query_engine_spark import session
+    from kaj_query_engine_spark.sources.versioned import _broadcast_key_cap
+
+    key_cap = {"1t": 2**40 // 64, "10MB": 163_840, "-1": 0}[setting]
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
     spark.conf.set(key, setting)
     try:
-        assert D._auto_broadcast_bytes(spark) == nbytes
+        assert _broadcast_key_cap(spark) == key_cap
+        assert session.broadcast_threshold_bytes(spark) == nbytes
     finally:
         spark.conf.set(key, prev)
 

@@ -1,6 +1,7 @@
 """RULE 1 enforcement: the registry's hand-curated
 ``_CHANGED_THIS_ROUND`` pin must be a SUPERSET of the set derived
-mechanically from the round's git diff (``tools/changed_queries.py``)
+mechanically from the change's git diff against its parent
+(``tools/changed_queries.py``)
 — the round-8 review's "What's wrong" #2: a silently under-maintained
 list would let a changed query rotate out of the externally-checked
 window, which is exactly the failure mode the rotation policy exists
@@ -216,3 +217,51 @@ def test_versioned_edit_pins_merge_twins(monkeypatch):
         "q89_stream_join_view",
     ):
         assert rider in fine, rider
+
+
+def test_diff_base_is_the_parent_of_the_change(monkeypatch, tmp_path):
+    """RULE 1 diffs against the parent of the change under review: the
+    newest marker commit at or below HEAD while the package is dirty,
+    at or below HEAD^ once it is clean — so a committed change is
+    diffed against the marker under it, never against itself, and
+    pins from earlier changes do not pile up."""
+    repo = tmp_path / "repo"
+    src = repo / CQ.PKG / "mod.py"
+    src.parent.mkdir(parents=True)
+
+    def git(*args: str) -> str:
+        return subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    def commit(subject: str) -> str:
+        src.write_text(subject + "\n")
+        git("add", "-A")
+        git("commit", "-q", "-m", subject)
+        return git("rev-parse", "HEAD")
+
+    git("init", "-q")
+    pr1 = commit("PR 1: first change")
+    anchor = commit("re-anchor @ PR 1: ROADMAP")
+    wip = commit("wip")
+    pr2 = commit("PR 2: second change")
+    monkeypatch.setattr(CQ, "REPO", repo)
+
+    def base_at(rev: str, dirty: bool = False) -> str | None:
+        git("checkout", "-q", rev)
+        if dirty:
+            src.write_text("edited\n")
+        base = CQ.diff_base()
+        git("checkout", "-q", "--", ".")
+        return base
+
+    assert base_at(anchor, dirty=True) == anchor  # dirty: marker at HEAD
+    assert base_at(wip, dirty=True) == anchor
+    assert base_at(pr2) == anchor  # clean PR: its parent marker
+    assert base_at(anchor) == pr1  # clean re-anchor: the PR before it
+    assert base_at(wip) == anchor  # clean WIP: the last marker
+    # an edit outside the package leaves the tree clean for RULE 1
+    (repo / "notes.md").write_text("x\n")
+    assert base_at(anchor) == pr1
+    assert base_at(pr1) is None  # clean root: nothing below it

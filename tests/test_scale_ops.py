@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kaj_query_engine_spark.operators.skew import salted_groupby_agg, salted_join
+from kaj_query_engine_spark.operators.skew import salted_groupby_agg
 from kaj_query_engine_spark.sources.layout import write_bucketed, write_partitioned
 from tests.conftest import SF_DIR
 
@@ -33,13 +33,6 @@ def test_salted_groupby_equals_plain(spark, skewed):
         F.sum("v").alias("total"),
         F.max("v").alias("mx"),
     )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_join_equals_plain(spark, skewed):
-    dim = spark.createDataFrame([(k, f"name{k}") for k in range(1, 50)], "k long, name string")
-    salted = salted_join(skewed, dim, "k").select("k", "v", "name")
-    plain = skewed.join(dim, "k").select("k", "v", "name")
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 

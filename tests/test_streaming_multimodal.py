@@ -295,42 +295,6 @@ def test_frame_sample_reconstructs_payload(media):
         assert rebuilt == payloads[d]
 
 
-def test_media_checksum_matches_hashlib(media):
-    sums = {r.doc_id: r.media_sha for r in M.media_checksum(media).collect()}
-    payloads = {r.doc_id: bytes(r.media) for r in media.collect()}
-    for d, sha in sums.items():
-        assert sha == hashlib.sha256(payloads[d]).hexdigest()
-
-
-def test_resize_media_matches_numpy_reference(media):
-    import numpy as np
-
-    out = {r.doc_id: r for r in M.resize_media(media, 16, 8).collect()}
-    src = {
-        r.doc_id: (bytes(r.media), r.media_meta.width, r.media_meta.height,
-                   r.media_meta.format)
-        for r in media.collect()
-    }
-    assert out.keys() == src.keys()
-    for doc_id, (payload, w, h, fmt) in src.items():
-        r = out[doc_id]
-        assert len(bytes(r.media)) == 16 * 8
-        assert (r.media_meta.width, r.media_meta.height) == (16, 8)
-        assert r.media_meta.format == fmt
-        buf = np.frombuffer(payload, dtype=np.uint8)
-        grid = buf[(np.arange(h)[:, None] * w + np.arange(w)[None, :]) % buf.size]
-        ref = grid[np.ix_(np.arange(8) * h // 8, np.arange(16) * w // 16)]
-        assert bytes(r.media) == ref.tobytes()
-
-
-def test_resize_media_identity_dims_reproduce_grid(media):
-    # resizing to the source dims is the fake-decode grid itself
-    first = media.limit(1).collect()[0]
-    w, h = first.media_meta.width, first.media_meta.height
-    out = M.resize_media(media.limit(1), w, h).collect()[0]
-    assert len(bytes(out.media)) == w * h
-
-
 def test_decode_media_guards_non_png(media):
     """Non-PNG payloads (the sha-block fake media) must fail loudly in
     the task — no codec libraries exist for them here and silently
@@ -966,37 +930,6 @@ def test_png_attach_streaming_equals_batch(spark, tmp_path):
         ).collect()
     }
     assert streamed == batch and len(streamed) == 15
-
-
-def test_normalize_media_unifies_codecs_to_png(spark):
-    """normalize_media turns a mixed PNG/JPEG/GIF corpus into all-PNG
-    whose decoded pixels equal each source codec's own decode —
-    normalization is a pure re-container, pixel-exact for the
-    lossless formats and IDCT-exact for JPEG."""
-    import numpy as np
-
-    from kaj_query_engine_spark.functions.png import decode_png
-
-    df = spark.createDataFrame([(i,) for i in range(6)], "doc_id long")
-    for attach in (
-        M.attach_png_media,
-        M.attach_gif_media,
-        lambda d, c: M.attach_jpeg_media(d, c),
-    ):
-        media = attach(df, "doc_id")
-        want = {
-            r.doc_id: (bytes(r.pixels), r.width, r.height, r.channels)
-            for r in M.decode_media(media).collect()
-        }
-        got = {r.doc_id: r for r in M.normalize_media(media).collect()}
-        assert set(got) == set(want)
-        for d, r in got.items():
-            px = decode_png(bytes(r.media))
-            wpx, ww, wh, wch = want[d]
-            assert r.media_meta.format == "png"
-            assert (r.media_meta.width, r.media_meta.height) == (ww, wh)
-            assert px.tobytes() == wpx
-            assert (px.ndim == 2) == (wch == 1)
 
 
 def test_flac_codec_roundtrip_and_rejects_malformed():

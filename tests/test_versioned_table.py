@@ -702,10 +702,11 @@ def test_compact_bucketed_one_file_per_bucket(spark, tmp_path):
 def test_random_commit_sequences_match_dict_model(spark, tmp_path):
     """Model-based pin of the manifest machinery: random sequences of
     full-snapshot / append / keyed / compact / vacuum — plus, on
-    bucketed tables, REBUCKET (round 10: online bucket-spec evolution)
-    and the LAZY migration pair start_rebucket / rebucket_step (round
-    11: arbitrary interleavings of other commits while the table is
-    mixed-spec, including a second retarget mid-migration) — must keep
+    bucketed tables, a whole spec change (start_rebucket, then
+    rebucket_step to completion) and the LAZY migration pair
+    start_rebucket / rebucket_step on their own (arbitrary
+    interleavings of other commits while the table is mixed-spec,
+    including a second retarget mid-migration) — must keep
     (a) the current read equal to a plain dict model, (b) every
     un-vacuumed version equal to the model snapshot recorded when it
     was committed, and (c) read_buckets for any probed key a
@@ -731,7 +732,12 @@ def test_random_commit_sequences_match_dict_model(spark, tmp_path):
         for _ in range(7):
             op = rng.choice(ops)
             if op == "rebucket":
-                v = tbl.rebucket(spark, rng.choice([2, 4, 8, 16]))
+                # a whole spec change: retarget, then migrate every
+                # old-spec bucket; each step version is a snapshot too
+                v = tbl.start_rebucket(rng.choice([2, 4, 8, 16]))
+                while (step := tbl.rebucket_step(spark)) is not None:
+                    history[v] = dict(model)
+                    v = step
             elif op == "start_rebucket":
                 # metadata-only retarget — legal mid-migration too
                 # (multi-hop: files keep the spec they are actually on)
@@ -793,9 +799,8 @@ def test_random_commit_sequences_match_dict_model(spark, tmp_path):
 
 def test_history_and_auto_compaction(spark, tmp_path):
     """history() reports per-version footprint and write amplification;
-    maybe_compact triggers on the stray-byte fraction (the cost every
-    keyed commit pays re-reading unfolded append deltas) or the file
-    count, and does NOTHING below both thresholds."""
+    stray_bytes() counts the unfolded append deltas (the cost every
+    keyed commit pays re-reading them) until compaction folds them."""
     tbl = VersionedTable(tmp_path / "t")
     tbl.init(
         spark.range(20_000).select(
@@ -805,7 +810,6 @@ def test_history_and_auto_compaction(spark, tmp_path):
         bucket_keys=["k"],
         n_buckets=4,
     )
-    assert tbl.maybe_compact(spark) is None  # fresh table: no trigger
     assert tbl.stray_bytes() == 0
     for i in range(3):
         tbl.commit_append(
@@ -820,21 +824,8 @@ def test_history_and_auto_compaction(spark, tmp_path):
     assert h[3]["bytes_total"] > h[3]["bytes_added"]
     assert all(r["bytes_added"] < h[0]["bytes_added"] for r in h[1:])
     assert h[3]["n_stray_files"] > 0 and tbl.stray_bytes() > 0
-    # small strays, default threshold: still no trigger
-    assert tbl.maybe_compact(spark) is None
-    # low threshold: triggers, folds strays into buckets
-    v = tbl.maybe_compact(spark, max_stray_fraction=0.0001)
-    assert v == 4 and tbl.stray_bytes() == 0
-    assert tbl.read(spark).count() == 20_015
-    assert tbl.last_applied_batch() == 2  # marker carried
-    # file-count trigger on an unbucketed table
-    tbl2 = VersionedTable(tmp_path / "t2")
-    tbl2.init(spark.range(100).select(
-        F.col("id").alias("k"), F.col("id").cast("string").alias("v")
-    ).repartition(8))
-    assert tbl2.maybe_compact(spark, max_files=16) is None
-    assert tbl2.maybe_compact(spark, max_files=4) == 1
-    assert tbl2.file_count() == 1
+    tbl.compact(spark)
+    assert tbl.stray_bytes() == 0
 
 
 def test_concurrent_reader_never_sees_torn_state(spark, tmp_path):
@@ -1226,7 +1217,12 @@ def test_rebucket_evolves_spec_preserving_history(spark, tmp_path):
              bucket_keys=["k"], n_buckets=2, change_feed=True)
     tbl.commit_keyed(df_(spark, [(7, "SEVEN")]),
                      spark.createDataFrame([(7,)], "k long"))
-    v = tbl.rebucket(spark, 8)
+    start = tbl.start_rebucket(8)
+    steps = []
+    while (step := tbl.rebucket_step(spark)) is not None:
+        steps.append(step)
+    assert steps and tbl.migration() is None
+    v = steps[-1]
     assert tbl.n_buckets == 8
     assert tbl.manifest(v)["n_buckets"] == 8
     # old versions stay time-travelable under their own spec
@@ -1242,9 +1238,10 @@ def test_rebucket_evolves_spec_preserving_history(spark, tmp_path):
     assert len(carried) >= 7  # at least the other buckets carried
     got = {r.k: r.v for r in tbl.read(spark).filter(F.col("k").isin(7, 8)).collect()}
     assert got == {7: "SEVEN2", 8: "v8"}
-    # rebucket is logically changeless: the feed reads straight through
-    assert tbl.read_changes(spark, v - 1).filter(
-        F.col("_commit_version") == v
+    # every rebucket commit is logically changeless: the feed reads
+    # straight through the start and each step
+    assert tbl.read_changes(spark, start - 1).filter(
+        F.col("_commit_version").between(start, v)
     ).count() == 0
     # and replay across the rebucket still lands on the final state
     from kaj_query_engine_spark.sources.versioned import apply_change_feed

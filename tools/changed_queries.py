@@ -7,9 +7,13 @@ The round-8 review flagged the hand-maintained ``_CHANGED_THIS_ROUND``
 list as the rotation policy's weak point: an omission silently
 violates RULE 1. This tool closes it:
 
-1. the round boundary is the newest commit whose subject matches
-   ``round N:`` (the driver's round-close commit); the round's changes
-   are ``git diff --name-only <boundary>..HEAD``;
+1. the diff base is the parent of the change under review: the
+   newest commit whose subject starts with ``PR N:``, ``re-anchor`` or
+   ``round N:``, searched from ``HEAD`` while the package has
+   uncommitted edits and from ``HEAD^`` once the tree is clean (so a
+   committed change is measured against the marker below it, not
+   against itself); the change is ``git diff <base>`` against the
+   working tree;
 2. each changed ``kaj_query_engine_spark/**.py`` file maps to a module;
 3. a query is DERIVED-CHANGED when any changed module is in the static
    import closure of the module that registers it (imports are
@@ -32,6 +36,7 @@ it, then the window budget the registry's pin lists spend.
 from __future__ import annotations
 
 import ast
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -46,19 +51,26 @@ def _git(*args: str) -> str:
     ).stdout
 
 
-def round_boundary() -> str | None:
-    """Newest commit whose subject is a driver round-close marker."""
-    out = _git(
-        "log", "--grep", r"^round [0-9]\+:", "-1", "--format=%H"
-    ).strip()
-    return out or None
+_MARKER = re.compile(r"(PR [0-9]+:|re-anchor|round [0-9]+:)")
 
 
-def default_range() -> str | None:
-    # single-rev form: git diffs boundary against the WORKING TREE, so
-    # uncommitted edits count as changed too — a query touched but not
-    # yet committed must not escape the pin
-    return round_boundary()
+def diff_base() -> str | None:
+    """The parent of the change under review: the newest marker commit
+    at or below ``HEAD`` while the package has uncommitted edits, else
+    at or below ``HEAD^``. Used as a single rev, git diffs it against
+    the WORKING TREE, so uncommitted edits count as changed too — a
+    query touched but not yet committed must not escape the pin."""
+    dirty = _git("status", "--porcelain", "--", f"{PKG}/").strip()
+    start = "HEAD" if dirty else "HEAD^"
+    try:
+        log = _git("log", "--format=%H %s", start)
+    except subprocess.CalledProcessError:  # clean root commit
+        return None
+    for line in log.splitlines():
+        sha, _, subject = line.partition(" ")
+        if _MARKER.match(subject):
+            return sha
+    return None
 
 
 def changed_modules(rng: str) -> set[str]:
@@ -181,7 +193,7 @@ def query_modules() -> dict[str, str]:
 
 def derive(rng: str | None = None) -> dict[str, list[str]]:
     """{derived-changed query: sorted changed modules pinning it}."""
-    rng = rng or default_range()
+    rng = rng or diff_base()
     if rng is None:
         return {}
     changed = changed_modules(rng)
@@ -408,8 +420,6 @@ def changed_symbols(rng: str) -> dict[str, set[str]]:
     historical range whose files have since moved maps approximately
     (changed-side conservatism still applies: unmapped lines pin the
     module level)."""
-    import re as _re
-
     out: dict[str, set[str]] = {}
     diff = _git("diff", "-U0", rng, "--", f"{PKG}/")
     cur: str | None = None
@@ -474,7 +484,7 @@ def changed_symbols(rng: str) -> dict[str, set[str]]:
                         cur = None
         elif line.startswith("@@") and cur is not None:
             _close_hunk()
-            m = _re.search(r"\+(\d+)(?:,(\d+))?", line)
+            m = re.search(r"\+(\d+)(?:,(\d+))?", line)
             if not m:
                 collecting = False
                 continue
@@ -504,7 +514,7 @@ def changed_symbols(rng: str) -> dict[str, set[str]]:
 def derive_fine(rng: str | None = None) -> dict[str, list[str]]:
     """{derived-changed query: sorted 'module:symbol' evidence} at
     SYMBOL granularity — the RULE 1 set the registry pins."""
-    rng = rng or default_range()
+    rng = rng or diff_base()
     if rng is None:
         return {}
     changed = changed_symbols(rng)
@@ -564,8 +574,13 @@ def window_budget() -> str:
 
 
 if __name__ == "__main__":
-    rng = sys.argv[1] if len(sys.argv) > 1 else default_range()
-    print(f"# range: {rng}")
+    if len(sys.argv) > 1:
+        rng = sys.argv[1]
+        print(f"# range: {rng}")
+    else:
+        rng = diff_base()
+        base = _git("log", "-1", "--format=%h %s", rng) if rng else "none\n"
+        print(f"# base: {base}", end="")
     d = derive_fine(rng)
     for name, hits in sorted(d.items()):
         print(f"{name}: {', '.join(hits)}")
