@@ -35,9 +35,14 @@ class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._tables: dict[str, DataFrame] = {}
+        self._views: dict[str, str] = {}
 
     def register(self, name: str, df: DataFrame) -> None:
-        self._tables[name.lower()] = df
+        key = name.lower()
+        self._tables[key] = df
+        view = self._views.pop(key, None)
+        if view is not None:
+            self.spark.catalog.dropTempView(view)
 
     def table(self, name: str) -> DataFrame:
         key = name.lower()
@@ -51,20 +56,18 @@ class Catalog:
     def names(self) -> list[str]:
         return sorted(self._tables)
 
-    def register_temp_views(self) -> None:
-        """Expose every table to spark.sql()."""
-        for name, df in self._tables.items():
-            df.createOrReplaceTempView(name)
+    def view(self, name: str) -> str:
+        """Name of a temp view over table ``name`` for ``spark.sql``,
+        created on first use under a session-unique name so catalogs
+        sharing a session never resolve each other's tables."""
+        import uuid
 
-    def analyze(self) -> None:
-        """Collect CBO stats — the Spark analog of the reference's
-        ``.stat`` files (row count + per-column distinct counts,
-        ``/root/reference/src/RandomDB.java:150-170``)."""
-        self.register_temp_views()
-        for name in self._tables:
-            self.spark.sql(
-                f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS"
-            )
+        key = name.lower()
+        if key not in self._views:
+            view = f"_kaj_{uuid.uuid4().hex}"
+            self.table(key).createOrReplaceTempView(view)
+            self._views[key] = view
+        return self._views[key]
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -1,27 +1,43 @@
-"""Lower the dialect IR onto the Spark DataFrame API.
+"""Lower the dialect IR to one parameterized Spark SQL statement.
 
 The reference builds a logical Operator tree (Scan → Select* → Join* →
 Project, ``/root/reference/src/qp/optimizer/RandomInitialPlan.java:49-65``)
-and optimizes join order itself; here we declare the same plan with
-DataFrame ops and let Catalyst/AQE choose join order and algorithms
+and optimizes join order itself; here the IR becomes ONE SQL text over
+the catalog's temp views (``Catalog.view``), analyzed once by
+``spark.sql``, and Catalyst/AQE choose join order and algorithms
 (broadcast / shuffled-hash / sort-merge replace the reference's
 NestedJoin / BlockNestedJoin / SortMergeJoin).
+
+No literal is ever spliced into the text: each one becomes a named
+parameter marker ``:pN`` bound through ``spark.sql``'s ``args``.
+Identifiers are the parser's ``[A-Za-z_][A-Za-z_0-9]*`` tokens, always
+backtick-quoted; tables are aliased by their lower-cased names.
 
 Replicated semantics (SURVEY.md §2.3):
 
 1. literal casting — every literal is a quoted string cast to the LHS
-   column's type (``src/qp/operators/Select.java:191-193,247-249``);
-2. selection-vs-join split by table name (``SQLQuery.java:51-69``);
-   selections sit directly above their scan (predicate pushdown by
-   construction — Catalyst re-derives this anyway);
+   column's type, ``CAST(:pN AS <type>)``; string columns compare
+   against the bare marker (``src/qp/operators/Select.java:191-193,
+   247-249``);
+2. selection-vs-join split by table name (``SQLQuery.java:51-69``):
+   both land in one WHERE conjunction over a comma FROM list, and
+   Catalyst pushes selections to their scans and builds the joins;
+   unconnected tables cross-join. FROM lists the tables in
+   :func:`table_order`, which is the ``SELECT *`` column order;
 3. ungrouped aggregates with bare columns use witness-row semantics
-   (``src/qp/operators/Aggregate.java:123-150``): with a MIN aggregate
-   present, emit the row(s) whose value in the first MIN column equals
-   the global minimum (MIN beats MAX); else the MAX row(s); else the
-   first input row. Ties emit every tying distinct row.
+   (``src/qp/operators/Aggregate.java:123-150``): a one-row derived
+   table ``_agg`` holds the aggregates. With a MIN or MAX aggregate it
+   is joined back onto its input on the first MIN column, else the
+   first MAX column (MIN beats MAX), and the witness rows are
+   ``SELECT DISTINCT``ed, so ties emit every tying distinct row. With
+   only COUNT/SUM/AVG the bare columns are ``min_by`` the bare-column
+   tuple in the same aggregate, and ``_n_in > 0`` drops the row a
+   global aggregate emits over empty input;
 4. DISTINCT and ORDER BY run last, on the projected result; ORDER BY
-   keys are resolved against the output schema by name, DESC applies
-   to the whole key list (``src/QueryMain.java:205-261``);
+   keys are resolved by qualified name against the output (projected
+   queries sort by output ordinal, ``SELECT *`` by the qualified
+   column), DESC applies to the whole key list
+   (``src/QueryMain.java:205-261``);
 5. join comparators: ``strict_compat=True`` coerces every join
    comparator to equality like the reference executor
    (``src/qp/utils/Tuple.java:50-61``); default executes the parsed
@@ -36,61 +52,55 @@ Replicated semantics (SURVEY.md §2.3):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StringType
 
 from kaj_query_engine_spark.catalog import Catalog
-from kaj_query_engine_spark.dialect.ast import (
-    AggType,
-    Attribute,
-    CompareOp,
-    Condition,
-    SQLQuery,
-)
-
-_OP_FN = {
-    CompareOp.LT: lambda a, b: a < b,
-    CompareOp.GT: lambda a, b: a > b,
-    CompareOp.LTE: lambda a, b: a <= b,
-    CompareOp.GTE: lambda a, b: a >= b,
-    CompareOp.EQ: lambda a, b: a == b,
-    CompareOp.NEQ: lambda a, b: a != b,
-}
+from kaj_query_engine_spark.dialect.ast import AggType, Attribute, SQLQuery
 
 
 class LoweringError(ValueError):
     pass
 
 
-def _attr_col(attr: Attribute) -> Column:
-    """tab.col via the per-table DataFrame alias."""
-    return F.col(f"{attr.table.lower()}.{attr.column}")
+def table_order(query: SQLQuery) -> list[str]:
+    """FROM tables (as written) in ``SELECT *`` column order: tables
+    merge into components along the join conditions, a join appending
+    its right-hand component to its left-hand one; components keep the
+    FROM position of their first table."""
+    chains: dict[str, list[str]] = {}
+    for name in query.from_list:
+        if name.lower() in chains:
+            raise LoweringError(f"duplicate table in FROM: {name}")
+        chains[name.lower()] = [name]
+    root = {key: key for key in chains}
+    for cond in query.joins:
+        lkey, rkey = cond.lhs.table.lower(), cond.rhs.table.lower()
+        if lkey not in root or rkey not in root:
+            raise LoweringError(f"unknown table in join: {cond}")
+        lc, rc = root[lkey], root[rkey]
+        if lc != rc:
+            chains[lc] += chains.pop(rc)
+            for key, r in root.items():
+                if r == rc:
+                    root[key] = lc
+    return [name for chain in chains.values() for name in chain]
 
 
-def _out_col(name: str) -> Column:
-    """Reference an output column whose name may contain dots/parens
-    (aggregates are named ``AGG(tab.col)``) — always backtick-quote."""
-    return F.col(f"`{name}`")
+def _col(attr: Attribute) -> str:
+    return f"`{attr.table.lower()}`.`{attr.column}`"
 
 
-def _literal_as(df_type: T.DataType, text: str) -> Column:
-    """Cast a quoted literal to the LHS column's type (quirk #1).
-
-    Numeric strings like "1000" compare numerically against INT/REAL
-    columns; everything else compares as a string.
-    """
-    lit = F.lit(text)
-    if isinstance(df_type, (T.StringType,)):
-        return lit
-    return lit.cast(df_type)
+def _where(conds: list[str]) -> str:
+    return " WHERE " + " AND ".join(conds) if conds else ""
 
 
-def _field_type(df: DataFrame, column: str) -> T.DataType:
-    for f in df.schema.fields:
-        if f.name == column:
-            return f.dataType
-    raise LoweringError(f"column not found: {column}")
+def _column_type(catalog: Catalog, attr: Attribute) -> DataType | None:
+    if catalog.has(attr.table):
+        for f in catalog.table(attr.table).schema.fields:
+            if f.name == attr.column:
+                return f.dataType
+    return None
 
 
 def lower(
@@ -105,15 +115,37 @@ def lower(
     if strict_compat and query.groupby_list:
         raise LoweringError("GroupBy is not implemented.")  # reference parity
 
-    # -- scan + per-table selections (quirks #1, #2) -------------------
-    tables: dict[str, DataFrame] = {}
-    for name in query.from_list:
-        key = name.lower()
-        if key in tables:
-            raise LoweringError(f"duplicate table in FROM: {name}")
-        tables[key] = catalog.table(key).alias(key)
+    args: dict[str, str] = {}
 
-    applied_selections = 0
+    def literal(lhs: Attribute, text: str) -> str:
+        # quirk #1: the literal takes the LHS column's type
+        dtype = _column_type(catalog, lhs)
+        if dtype is None:
+            raise LoweringError(f"column not found: {lhs.column}")
+        marker = f":p{len(args)}"
+        args[marker[1:]] = text
+        if isinstance(dtype, StringType):
+            return marker
+        return f"CAST({marker} AS {dtype.simpleString()})"
+
+    def aggregate(attr: Attribute) -> str:
+        # Attribute.java:114-128 / Project.java:100-104: COUNT counts
+        # all rows, SUM/AVG on STRING is rejected
+        if attr.agg is AggType.COUNT:
+            return "COUNT(1)"
+        if attr.agg in (AggType.SUM, AggType.AVG) and isinstance(
+            _column_type(catalog, attr), StringType
+        ):
+            raise LoweringError(
+                f"{attr.agg.name} on STRING attribute {attr.qualified()} is INVALID"
+            )
+        return f"{attr.agg.name}({_col(attr)})"
+
+    # -- FROM + WHERE (quirks #1, #2, #5, #6) ----------------------------
+    order = table_order(query)
+    in_from = {name.lower() for name in order}
+    from_ = ", ".join(f"`{catalog.view(n)}` AS `{n.lower()}`" for n in order)
+    conds: list[str] = []
     for cond in query.selections:
         if strict_compat and isinstance(cond.rhs, Attribute):
             # Reference quirk (found by the golden fuzzer): the
@@ -132,259 +164,109 @@ def lower(
             # null-root crash surfaces below as a loud error
             # instead of an NPE.
             continue
-        key = cond.lhs.table.lower()
-        if key not in tables:
+        if cond.lhs.table.lower() not in in_from:
             raise LoweringError(f"unknown table in condition: {cond.lhs.table}")
-        df = tables[key]
-        lhs = _attr_col(cond.lhs)
         if isinstance(cond.rhs, Attribute):
-            rhs: Column = _attr_col(cond.rhs)  # same-table attr comparison
+            rhs = _col(cond.rhs)  # same-table attr comparison
         else:
-            rhs = _literal_as(_field_type(df, cond.lhs.column), cond.rhs)
-        tables[key] = df.filter(_OP_FN[cond.op](lhs, rhs))
-        applied_selections += 1
-    if (
-        strict_compat
-        and query.selections
-        and applied_selections == 0
-        and not query.joins
-    ):
+            rhs = literal(cond.lhs, cond.rhs)
+        conds.append(f"{_col(cond.lhs)} {cond.op.value} {rhs}")
+    if strict_compat and query.selections and not conds and not query.joins:
         raise LoweringError(
             "reference parity: a join-less query whose only WHERE "
             "conditions are same-table attribute comparisons crashes "
             "the reference (null Select root, RandomInitialPlan.java:"
             "126-129) — the conditions are dropped, never executed"
         )
-
-    # -- joins ----------------------------------------------------------
-    # Merge tables along join conditions (connected components); any
-    # unconnected remainder is cross-joined, mirroring relational
-    # semantics. Catalyst + CBO reorder the join tree; AQE picks the
-    # physical algorithm at runtime — the entire RandomOptimizer
-    # (src/qp/optimizer/RandomOptimizer.java) collapses into this.
-    component: dict[str, int] = {k: i for i, k in enumerate(tables)}
-    current: dict[int, DataFrame] = {i: df for i, (k, df) in enumerate(tables.items())}
-
-    def find(key: str) -> int:
-        return component[key]
-
     for cond in query.joins:
-        assert isinstance(cond.rhs, Attribute)
-        lkey, rkey = cond.lhs.table.lower(), cond.rhs.table.lower()
-        if lkey not in component or rkey not in component:
-            raise LoweringError(f"unknown table in join: {cond}")
-        op = CompareOp.EQ if strict_compat else cond.op  # quirk #5
-        pred = _OP_FN[op](_attr_col(cond.lhs), _attr_col(cond.rhs))
-        lc, rc = find(lkey), find(rkey)
-        if lc == rc:
-            current[lc] = current[lc].filter(pred)  # extra condition on a joined pair
-        else:
-            current[lc] = current[lc].join(current[rc], on=pred, how="inner")
-            for k, c in component.items():
-                if c == rc:
-                    component[k] = lc
-            del current[rc]
+        op = "=" if strict_compat else cond.op.value  # quirk #5
+        conds.append(f"{_col(cond.lhs)} {op} {_col(cond.rhs)}")
 
-    comps = list(current.values())
-    df = comps[0]
-    for other in comps[1:]:
-        df = df.crossJoin(other)
-
-    # -- group-by (parseable in the reference but unimplemented there) --
+    # -- select list: output expression by project position -------------
+    project = query.project_list
+    cols = [_col(a) for a in project]
+    aggs = [i for i, a in enumerate(project) if a.agg is not AggType.NONE]
+    distinct = query.is_distinct
+    group_by = ""
     if query.groupby_list:
-        if not query.has_aggregates:
+        # parseable in the reference but unimplemented there
+        if not aggs:
             raise LoweringError("GROUPBY requires aggregates in the select list")
-        keys = [_attr_col(a) for a in query.groupby_list]
-        aggs = [
-            _agg_expr(a, df).alias(a.display())
-            for a in query.project_list
-            if a.agg is not AggType.NONE
+        for i in aggs:
+            cols[i] = aggregate(project[i])
+        group_by = " GROUP BY " + ", ".join(_col(a) for a in query.groupby_list)
+    elif aggs:
+        # quirk #3: _agg._a<i> is project position i's aggregate
+        bare = [i for i in range(len(project)) if i not in aggs]
+        ranked = [  # MIN beats MAX
+            i for t in (AggType.MIN, AggType.MAX) for i in aggs if project[i].agg is t
         ]
-        names = [
-            a.display() if a.agg is not AggType.NONE else a.column
-            for a in query.project_list
-        ]
-        df = df.groupBy(*keys).agg(*aggs)
-        df = df.select(
-            *[
-                _out_col(a.display() if a.agg is not AggType.NONE else a.column)
-                for a in query.project_list
-            ]
+        witness = ranked[0] if bare and ranked else None
+        inner = [f"{aggregate(project[i])} AS _a{i}" for i in aggs]
+        if bare and witness is None:
+            # COUNT/SUM/AVG only → the reference takes bare columns
+            # from the "first" input row (Aggregate.java:146-149). File
+            # order does not exist in a distributed engine, so the
+            # witness is the row with the smallest bare-column tuple:
+            # deterministic across runs and partitionings (rows tying
+            # on the key have identical bare tuples), and equal to the
+            # reference whenever its answer is itself well-defined.
+            key = "struct(" + ", ".join(cols[i] for i in bare) + ")"
+            inner += [f"min_by({cols[i]}, {key}) AS _a{i}" for i in bare]
+        agg_table = (
+            f"(SELECT {', '.join(inner)}, COUNT(1) AS _n_in "
+            f"FROM {from_}{_where(conds)}) AS _agg"
         )
-    elif query.has_aggregates:
-        df = _lower_ungrouped_agg(query, df)
-    elif query.project_list:
-        df = df.select(
-            *[_attr_col(a).alias(a.column) for a in query.project_list]
-        )
-    # SELECT * → no Project node at all (RandomInitialPlan.java:180-184)
+        if witness is None:
+            cols = [f"_agg._a{i}" for i in range(len(project))]
+            from_, conds = agg_table, ["_agg._n_in > 0"]
+        else:
+            distinct = True
+            conds.append(f"{cols[witness]} = _agg._a{witness}")
+            for i in aggs:
+                cols[i] = f"_agg._a{i}"
+            from_ += ", " + agg_table
+    # SELECT * → no Project node (RandomInitialPlan.java:180-184)
+    select = ", ".join(f"{c} AS `{a.display()}`" for c, a in zip(cols, project))
 
-    # -- driver-side DISTINCT then ORDER BY (quirk #4) -------------------
-    if query.is_distinct:
-        df = df.distinct()
-    if query.orderby_list:
-        resolved = []
-        for a in query.orderby_list:
-            col = _resolve_orderby_key(query, a, tables, df)
-            if col is None:
-                if strict_compat:
-                    # reference parity: QueryMain resolves ORDERBY keys
-                    # by QUALIFIED string match against the OUTPUT
-                    # schema and simply doesn't add unmatched ones to
-                    # the sort index list (QueryMain.java:209-216) — a
-                    # key outside the projection is silently skipped
-                    # (verified against the compiled engine: rc 0,
-                    # sorted by the surviving keys only). Default mode
-                    # raises — silently ignoring a requested sort key
-                    # is a bug, not a feature.
-                    continue
-                raise LoweringError(f"ORDERBY key not in output schema: {a.qualified()}")
-            resolved.append(col)
-        if resolved and query.project_list:
-            # POSITIONAL sort via a rename round-trip: the resolver
-            # returns output POSITIONS for projected queries, but
-            # pyspark's df[i] looks the name back up, which breaks on
-            # aggregate output names ('MAX(tab.col)' parses as an
-            # expression) and on duplicate bare names (CUSTOMER.cid,
-            # CART.cid both project 'cid'). toDF renames by position,
-            # the sort runs on unambiguous temp names, and a second
-            # toDF restores the byte-pinned sink headers — found by
-            # the grouped ORDERBY-on-aggregate fuzz (round 10)
-            orig = df.columns
-            tmp = df.toDF(*[f"__ob{i}" for i in range(len(orig))])
-            keys = [
-                tmp[f"__ob{i}"].desc() if query.is_desc else tmp[f"__ob{i}"].asc()
-                for i in resolved
-            ]
-            df = tmp.orderBy(*keys).toDF(*orig)
-        elif resolved:
-            keys = [
-                col.desc() if query.is_desc else col.asc()
-                for col in resolved
-            ]
-            df = df.orderBy(*keys)
-    return df
+    # -- ORDER BY, after DISTINCT (quirk #4) ------------------------------
+    sort = []
+    for a in query.orderby_list:
+        if project:
+            pos = next(
+                (
+                    str(i + 1)
+                    for i, p in enumerate(project)
+                    if (p.agg, p.table.lower(), p.column)
+                    == (a.agg, a.table.lower(), a.column)
+                ),
+                None,
+            )
+        elif (
+            a.agg is AggType.NONE
+            and a.table.lower() in in_from
+            and a.column in catalog.table(a.table).columns
+        ):
+            pos = _col(a)
+        else:
+            pos = None
+        if pos is None:
+            if strict_compat:
+                # reference parity: QueryMain resolves ORDERBY keys by
+                # QUALIFIED string match against the OUTPUT schema and
+                # simply doesn't add unmatched ones to the sort index
+                # list (QueryMain.java:209-216) — a key outside the
+                # projection is silently skipped (verified against the
+                # compiled engine: rc 0, sorted by the surviving keys
+                # only). Default mode raises — silently ignoring a
+                # requested sort key is a bug, not a feature.
+                continue
+            raise LoweringError(f"ORDERBY key not in output schema: {a.qualified()}")
+        sort.append(pos + (" DESC" if query.is_desc else ""))
 
-
-def _resolve_orderby_key(
-    query: SQLQuery, a: Attribute, tables, df
-) -> int | Column | None:
-    """ORDERBY key → output POSITION (projected queries) or sort
-    Column (``SELECT *``), or None when the key does not appear in the
-    output schema. Resolution is by QUALIFIED attribute like the
-    reference's ``attr.toString().equals(...)`` match — a bare-name
-    match would sort ``CART.remarks`` when ``CARTDETAILS.remarks`` was
-    asked for (tables are matched case-insensitively, the dialect's
-    norm). Matches resolve POSITIONALLY against the project list, so
-    duplicate output names (``CUSTOMER.cid, CART.cid``) and aggregate
-    output names stay unambiguous (the caller sorts through a
-    positional rename); ``SELECT *`` keys resolve through the
-    per-table aliases, which survive the join."""
-    from kaj_query_engine_spark.dialect.ast import AggType
-
-    if query.project_list:
-        for i, p in enumerate(query.project_list):
-            if (
-                p.agg is a.agg
-                and p.table.lower() == a.table.lower()
-                and p.column == a.column
-            ):
-                return i
-        return None
-    # SELECT *: every table's every column is in the output schema
-    key = a.table.lower()
-    if a.agg is AggType.NONE and key in tables and a.column in tables[key].columns:
-        return _attr_col(a)
-    return None
-
-
-def _agg_expr(attr: Attribute, df: DataFrame) -> Column:
-    """Aggregate typing rules from ``Attribute.java:114-128`` /
-    ``Project.java:100-104``: COUNT→int (counts all rows, no null
-    semantics), AVG→floating point, SUM/AVG on STRING rejected."""
-    col = _attr_col(attr)
-    source_type = None
-    try:
-        source_type = _field_type(df, attr.column)
-    except LoweringError:
-        pass
-    if attr.agg in (AggType.SUM, AggType.AVG) and isinstance(source_type, T.StringType):
-        raise LoweringError(
-            f"{attr.agg.name} on STRING attribute {attr.qualified()} is INVALID"
-        )
-    if attr.agg is AggType.MIN:
-        return F.min(col)
-    if attr.agg is AggType.MAX:
-        return F.max(col)
-    if attr.agg is AggType.SUM:
-        return F.sum(col)
-    if attr.agg is AggType.AVG:
-        return F.avg(col)
-    if attr.agg is AggType.COUNT:
-        return F.count(F.lit(1))  # COUNT counts all rows (§2.5)
-    raise LoweringError(f"not an aggregate: {attr}")
-
-
-def _lower_ungrouped_agg(query: SQLQuery, df: DataFrame) -> DataFrame:
-    """Ungrouped aggregate with optional bare columns — witness-row
-    semantics of ``Aggregate.java:123-150`` (see module docstring #3),
-    expressed as: 1-row global agg broadcast-joined back onto the base,
-    filtered to the witness row(s), deduped. Fully distributed: the
-    agg is a partial-aggregate reduce; the join is a broadcast of one
-    row; no driver-side loop.
-    """
-    agg_attrs = [a for a in query.project_list if a.agg is not AggType.NONE]
-    bare_attrs = [a for a in query.project_list if a.agg is AggType.NONE]
-
-    agg_cols = [_agg_expr(a, df).alias(a.display()) for a in agg_attrs]
-    # hidden input-row count: the reference's emit loop runs per input
-    # tuple, so EMPTY input produces NO output row (Aggregate.java:83-161)
-    # — Spark's global agg would emit one NULL row instead; filter it.
-    aggs = df.agg(*agg_cols, F.count(F.lit(1)).alias("_n_in"))
-
-    if not bare_attrs:
-        return aggs.filter(F.col("_n_in") > 0).select(
-            *[_out_col(a.display()) for a in query.project_list]
-        )
-
-    # Witness: first MIN aggregate if any, else first MAX (MIN beats MAX,
-    # Aggregate.java:127-135); ties emit all tying rows, deduplicated
-    # (Aggregate.java:155-157).
-    witness = next((a for a in agg_attrs if a.agg is AggType.MIN), None)
-    if witness is None:
-        witness = next((a for a in agg_attrs if a.agg is AggType.MAX), None)
-
-    if witness is not None:
-        joined = df.crossJoin(F.broadcast(aggs))
-        joined = joined.filter(_attr_col(witness) == _out_col(witness.display()))
-        out = joined.select(
-            *[
-                _out_col(a.display())
-                if a.agg is not AggType.NONE
-                else _attr_col(a).alias(a.column)
-                for a in query.project_list
-            ]
-        )
-        return out.dropDuplicates()
-
-    # COUNT/SUM/AVG only → the reference takes bare columns from the
-    # "first" input row (Aggregate.java:146-149). File order does not
-    # exist in a distributed engine, so we define the witness as the
-    # row with the lexicographically smallest bare-column tuple:
-    # min_by over the same key for every bare column is deterministic
-    # across runs, partitionings, and cluster sizes (rows tying on the
-    # key have identical bare tuples, so tie-breaking can't change the
-    # output). When the bare column is constant — the only case where
-    # the reference's answer is itself well-defined — this matches it.
-    bare_key = F.struct(*[_attr_col(a) for a in bare_attrs])
-    firsts = df.agg(
-        *agg_cols,
-        F.count(F.lit(1)).alias("_n_in"),
-        *[F.min_by(_attr_col(a), bare_key).alias(a.column) for a in bare_attrs],
-    ).filter(F.col("_n_in") > 0)
-    return firsts.select(
-        *[
-            _out_col(a.display() if a.agg is not AggType.NONE else a.column)
-            for a in query.project_list
-        ]
+    text = (
+        f"SELECT {'DISTINCT ' if distinct else ''}{select or '*'} "
+        f"FROM {from_}{_where(conds)}{group_by}"
+        + (" ORDER BY " + ", ".join(sort) if sort else "")
     )
+    return catalog.spark.sql(text, args)

@@ -140,15 +140,14 @@ class KajEngineGolden(KajEngine):
 
     def header_tokens(self, query_text: str) -> list[str]:
         """The reference result header for ``query_text``: projection
-        order when a project list exists; for ``SELECT *`` the join
-        output schema — each table's columns in schema order, tables
-        concatenated in the same component-merge order ``lower()``
-        builds its join tree in (``dialect/lowering.py``), which is the
-        order Spark concatenates join output columns in. The reference
-        prints ITS optimizer's join order here (randomized per run), so
-        a byte-compare permutes columns by these unique qualified
-        names first."""
+        order when a project list exists; for ``SELECT *`` each table's
+        columns in schema order, tables in the ``table_order`` that
+        ``lower()`` lists them in (``dialect/lowering.py``). The
+        reference prints ITS optimizer's join order here (randomized
+        per run), so a byte-compare permutes columns by these unique
+        qualified names first."""
         from kaj_query_engine_spark.dialect.ast import AggType
+        from kaj_query_engine_spark.dialect.lowering import table_order
 
         q = parse(query_text)
         if q.project_list:
@@ -156,30 +155,10 @@ class KajEngineGolden(KajEngine):
                 a.display() if a.agg is not AggType.NONE else a.qualified()
                 for a in q.project_list
             ]
-        # SELECT *: replay lower()'s component merge over table names
-        from kaj_query_engine_spark.dialect.lowering import LoweringError
-
-        order: dict[str, list[str]] = {n.lower(): [n] for n in q.from_list}
-        root: dict[str, str] = {n.lower(): n.lower() for n in q.from_list}
-        for cond in q.joins:
-            for side in (cond.lhs.table, cond.rhs.table):
-                if side.lower() not in root:
-                    # same diagnostic lower() raises for this input —
-                    # never a bare KeyError from the header replay
-                    raise LoweringError(f"unknown table in join: {cond}")
-            lc, rc = root[cond.lhs.table.lower()], root[cond.rhs.table.lower()]
-            if lc == rc:
-                continue
-            order[lc] += order[rc]
-            for k, r in root.items():
-                if r == rc:
-                    root[k] = lc
-            del order[rc]
         return [
             f"{name}.{col}"
-            for chain in order.values()
-            for name in chain
-            for col in self.catalog.table(name.lower()).columns
+            for name in table_order(q)
+            for col in self.catalog.table(name).columns
         ]
 
     def execute_to_golden(self, query_text: str, out_path: str) -> list[str]:

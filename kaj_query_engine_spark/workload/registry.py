@@ -73,33 +73,14 @@ def register(
 # pile up in the window.
 #
 # Pins of this change (derive_fine output; the rotation pytest
-# enforces the superset). Most are conservative neighbour pins: a
-# deleted helper's hunk is attributed to the symbol at its splice
-# point, and a docstring edit pins its whole module.
+# enforces the superset): the dialect queries, whose lowering became
+# one parameterized SQL statement over ``Catalog.view`` temp views.
 _CHANGED_THIS_ROUND = [
-    "q19_bucket_evolution",  # versioned: key cap reads the session's
-    "q33_table_time_travel",  # parsed broadcast threshold; the eager
-    "q55_merge_upsert",  # spec change and gated compaction deleted
-    "q66_merge_evolve",
-    "q85_stream_merge",
-    "q86_stream_scd2",
-    "q87_stream_agg_state",
-    "q89_stream_join_view",
-    "q12_semantic_dedup",  # dedup: threshold reader moved to session
-    "q50_dedup_exact",  # dedup: minhash/LSH parameters folded
-    "q51_minhash_lsh",
-    "q52_ngram_jaccard",
-    "q53_simhash",
-    "q54_dedup_clusters",
-    "q64_pagerank",
-    "q68_span_dedup",
-    "q69_span_decontaminate",
-    "q82_stream_dedup",
-    "q37_salted_agg",  # skew: the salted join deleted
-    "q62_embedding_neardup",  # similarity: the qvec unpacker and the
-    "q63_ann_ivf",  # one-shot IVF wrapper deleted
-    "q90_media_pipeline",  # multimodal: checksum/resize/normalize
-    "q93_codec_decode",  # deleted
+    "q01_scan",
+    "q02_select_distinct_orderby",
+    "q03_agg_witness",
+    "q07_join4",
+    "q10_theta_join",
 ]
 
 # Stalest-first (RULE 2): the 31 queries OUTSIDE round 15's 50-query

@@ -8,7 +8,11 @@ get dedicated cases.
 
 import pytest
 
-from kaj_query_engine_spark.engine import _PLAN_CACHE_SIZE, KajEngine
+from kaj_query_engine_spark.engine import (
+    _PLAN_CACHE_SIZE,
+    KajEngine,
+    KajEngineGolden,
+)
 from tests.conftest import SF_DIR, assert_same_result, count_jobs
 
 
@@ -162,13 +166,63 @@ def test_string_literal_cast_to_int(engine, duck):
     )
 
 
-def test_string_comparison_stays_lexicographic(engine, duck):
+@pytest.mark.parametrize(
+    "literal", ["m", "a' OR '1'='1", "m\\", ":p0", "m--"]
+)
+def test_string_comparison_stays_lexicographic(engine, duck, literal):
+    """Each literal is bound as one plain string, never spliced into
+    the SQL text: quotes, backslashes, parameter-marker lookalikes and
+    comment starts compare like any other string."""
+    quoted = literal.replace("'", "''")
     run(
         engine,
         duck,
-        'SELECT customer_ref.cid FROM customer_ref WHERE customer_ref.firstname<"m"',
-        "SELECT cid FROM customer_ref WHERE firstname < 'm'",
+        "SELECT customer_ref.cid FROM customer_ref "
+        f'WHERE customer_ref.firstname<"{literal}"',
+        f"SELECT cid FROM customer_ref WHERE firstname < '{quoted}'",
     )
+
+
+@pytest.mark.parametrize(
+    "text, columns, dtypes",
+    [
+        (
+            # written right-hand first: the join puts cart_ref first
+            "SELECT * FROM customer_ref,cart_ref WHERE cart_ref.cid=customer_ref.cid",
+            ["cartid", "cid", "status", "remarks",
+             "cid", "gender", "firstname", "lastname", "address"],
+            ["int", "int", "string", "string",
+             "int", "int", "string", "string", "string"],
+        ),
+        (
+            # components merge out of FROM order: cartdetails_ref
+            # absorbs bill_ref, then cart_ref absorbs both
+            "SELECT * FROM cart_ref,bill_ref,cartdetails_ref "
+            "WHERE cartdetails_ref.iid=bill_ref.iid,"
+            "cart_ref.cartid=cartdetails_ref.cartid",
+            ["cartid", "cid", "status", "remarks",
+             "iid", "cartid", "qty", "remarks",
+             "billid", "iid", "amount", "remarks"],
+            ["int", "int", "string", "string",
+             "int", "int", "int", "string",
+             "int", "int", "int", "string"],
+        ),
+    ],
+    ids=["right_hand_first", "merged_out_of_from_order"],
+)
+def test_select_star_column_order_and_header(
+    spark, engine, ref_tables, text, columns, dtypes
+):
+    """``SELECT *`` keeps the join-merge column order, and the golden
+    header names the same columns in the same order."""
+    df = engine.sql(text)
+    assert df.columns == columns
+    assert [t for _name, t in df.dtypes] == dtypes
+    golden = KajEngineGolden(spark)
+    for name, (tdf, _rows, _cols) in ref_tables.items():
+        golden.register(name, tdf)
+    tokens = golden.header_tokens(text)
+    assert [tok.split(".", 1)[1] for tok in tokens] == df.columns
 
 
 def test_theta_join_executes_operator(engine, duck):
@@ -343,16 +397,30 @@ def test_repeated_text_reuses_prepared_dataframe(spark, fresh_engine):
 
 
 def test_repeated_text_sees_reregistered_table(spark, fresh_engine):
-    text = "SELECT customer_ref.cid FROM customer_ref"
-    assert len(fresh_engine.sql(text).collect()) == 150
-    fresh_engine.register(
-        "customer_ref",
-        spark.createDataFrame(
-            [(7, 0, "a", "b", "c")],
+    """Each engine's tables live in views of their own: two engines
+    sharing a session and a table name never see each other's rows,
+    and a re-registered table drops the view it replaces."""
+
+    def one_row(cid):
+        return spark.createDataFrame(
+            [(cid, 0, "a", "b", "c")],
             "cid int, gender int, firstname string, lastname string, address string",
-        ),
-    )
-    assert [tuple(r) for r in fresh_engine.sql(text).collect()] == [(7,)]
+        )
+
+    def rows(eng):
+        return [tuple(r) for r in eng.sql(text).collect()]
+
+    text = "SELECT customer_ref.cid FROM customer_ref"
+    other = KajEngine(spark)
+    other.register("customer_ref", one_row(8))
+    assert len(rows(fresh_engine)) == 150
+    assert rows(other) == [(8,)]
+    assert len(rows(fresh_engine)) == 150
+    replaced = fresh_engine.catalog.view("customer_ref")
+    fresh_engine.register("customer_ref", one_row(7))
+    assert rows(fresh_engine) == [(7,)]
+    assert rows(other) == [(8,)]
+    assert replaced not in {t.name for t in spark.catalog.listTables()}
 
 
 def test_load_fixtures_drops_prepared_queries(fresh_engine):
