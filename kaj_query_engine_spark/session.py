@@ -10,8 +10,9 @@ Design-for-scale notes (local[N] is the test harness, not the target):
 - AQE is on: runtime partition coalescing + skew-join splitting mean
   the same plan survives a 100x scale-up without hand-retuning
   ``spark.sql.shuffle.partitions``.
-- CBO is on so stats (``ANALYZE TABLE``) feed join reordering, the
-  Spark analog of the reference's ``.stat``-file cost model
+- CBO join reordering is on, working from the plans' size estimates
+  (nothing here runs ``ANALYZE TABLE``, so no column statistics feed
+  it) — the Spark analog of the reference's ``.stat``-file cost model
   (``src/qp/optimizer/PlanCost.java``).
 - Arrow is on: every pandas_udf/applyInPandas extension operator
   transfers columnar batches, not pickled rows.

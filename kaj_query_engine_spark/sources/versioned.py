@@ -40,12 +40,14 @@ single-writer maintenance job needs:
     reads select the manifest's recorded columns, so the parquet
     scan prunes it for free), and the manifest records each file's
     ``khr = [min, max]`` of that column straight from the parquet
-    footer — metadata-only, no data read. ``commit_keyed`` and
-    :meth:`read_buckets` select files by touched-key hash against
-    these ranges; a file whose range provably misses every touched
-    key is carried forward even when its bucket is touched. Append
-    "stray" files record ``khr`` too, so a keyed commit skips strays
-    that cannot hold its keys instead of re-writing them.
+    footer — metadata-only, no data read. ONE selection,
+    ``_touched_files``, decides which files a keyed batch touches:
+    ``commit_keyed`` rewrites exactly the files it picks and
+    :meth:`read_buckets` reads exactly those same files. A file whose
+    range provably misses every touched key is carried forward even
+    when its bucket is touched. Append "stray" files record ``khr``
+    too, so a keyed commit skips strays that cannot hold its keys
+    instead of re-writing them.
   * large writes hash-range SUB-SPLIT each bucket (a ``_ks`` partition
     directory from the hash's top bits) so no file much exceeds
     ``target_file_rows``; with files bounded and range-pruned, a
@@ -139,11 +141,14 @@ chunks. Measured on the probe's own growth table
 (``versioned_commit_bytes_fixed_delta``): quiet at 1×/4×/16× and
 fires 8→16 at the 64× point where keyed metadata read 13.8 KB —
 the trigger lands exactly where the curve does. Selective readers
-(:meth:`read_buckets`, :meth:`commit_keyed`, :meth:`migration`)
-parse only the shards whose bucket can hold a touched key, and
-:meth:`vacuum` reference-counts shard files exactly like data files.
-Whole-table consumers see the merged flat view through
-:meth:`manifest`, unchanged.
+(:meth:`read_buckets` and :meth:`commit_keyed`, through their shared
+selection) parse only the shards whose bucket can hold a touched key,
+:meth:`migration` parses none, and :meth:`vacuum` reference-counts
+shard files exactly like data files. Whole-table consumers see the
+merged flat view through :meth:`manifest`, unchanged.
+
+Every bucketed manifest is sharded; unbucketed tables keep one flat
+inline ``files`` list, their only format.
 """
 
 from __future__ import annotations
@@ -167,24 +172,22 @@ from kaj_query_engine_spark.session import broadcast_threshold_bytes
 class TouchedInfo(NamedTuple):
     """Everything a keyed read/commit needs to know about a touched-key
     frame, from ONE capped driver collect (hash, count per distinct
-    key): the sorted hash list drives file pruning, the bucket set
-    drives bucket pruning, n_rows drives the broadcast-size decision,
-    and n_rows == 0 is the no-op short-circuit. The foreachBatch apply
-    fns compute it once per batch and pass it to both
-    :meth:`VersionedTable.read_buckets` and
-    :meth:`VersionedTable.commit_keyed` so the batch pays one driver
-    job, not one per call."""
+    key): the sorted hash list drives file pruning, the per-spec
+    bucket sets drive bucket pruning, n_rows drives the broadcast-size
+    decision, and n_rows == 0 is the no-op short-circuit. The
+    foreachBatch apply fns compute it once per batch and pass it to
+    both :meth:`VersionedTable.read_buckets` and
+    :meth:`VersionedTable.commit_keyed`, so the batch pays one driver
+    job, not one per call, and both select the same files from it."""
 
     hashes: list[int] | None  # sorted distinct key hashes; None past cap
     n_rows: int | None  # distinct touched rows; None past cap
-    buckets: set  # touched bucket ids under `n_buckets`
-    n_buckets: int  # the bucket spec this info was computed under
-    # touched bucket ids under every OTHER spec still present in the
-    # manifest (lazy rebucket in progress: files written pre-migration
-    # keep their old spec until migrated). None from legacy 4-field
-    # constructions — consumers fall back to deriving from `hashes`,
-    # or to no bucket pruning for that spec (correct, conservative).
-    buckets_by_nb: dict | None = None
+    n_buckets: int  # the manifest's current bucket spec
+    # touched bucket ids per spec present in the manifest: the current
+    # spec plus any old spec a lazy rebucket has not yet migrated. A
+    # spec missing here is not bucket-pruned (correct, conservative).
+    buckets: dict[int, set]
+
 
 class ConcurrentWriterError(RuntimeError):
     """A second writer committed while this commit was in flight. The
@@ -256,9 +259,6 @@ def _broadcast_key_cap(spark: SparkSession) -> int:
 _KHS_EXACT_CAP = 1024
 
 
-_PA_WARNED = False
-
-
 def _parquet_kh_stats(
     p: Path,
 ) -> tuple[int | None, list[int] | None, list[int] | None]:
@@ -266,32 +266,10 @@ def _parquet_kh_stats(
     FOOTER — metadata-only except for files at/under _KHS_EXACT_CAP
     rows, whose single ``_kh`` column is read to record the exact
     list. None range when the file carries no ``_kh`` column
-    (pre-upgrade files, unbucketed tables) or a row group lacks
-    min/max stats; such files are simply never pruned.
+    (an append delta without the key columns) or a row group lacks
+    min/max stats; such files are simply never pruned."""
+    import pyarrow.parquet as pq
 
-    A missing pyarrow is warned ONCE (not per file): without footer
-    stats nothing breaks, but sub-splitting, file-level pruning, and
-    manifest row counts all silently degrade to bucket-granular
-    behavior — a deployment missing the optional dependency should
-    notice the degraded mode instead of diagnosing slow keyed commits
-    (round-10 advice)."""
-    global _PA_WARNED
-    try:
-        import pyarrow.parquet as pq
-    except Exception:
-        if not _PA_WARNED:
-            _PA_WARNED = True
-            import warnings
-
-            warnings.warn(
-                "pyarrow unavailable: versioned-table parquet footer "
-                "statistics (rows/khr/khs) will not be recorded, so "
-                "keyed commits degrade to bucket-granular rewrites "
-                "and files are never sub-split to target_file_rows",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return None, None, None
     try:
         pf = pq.ParquetFile(str(p))
         md = pf.metadata
@@ -534,8 +512,9 @@ class VersionedTable:
     #   are a set — and the next rewrite of that bucket folds them
     #   into one shard.
     #
-    # Unbucketed tables (and legacy manifests) keep the flat inline
-    # ``files`` list; every reader falls back transparently.
+    # Unbucketed tables keep the flat inline ``files`` list (nothing
+    # prunes them); :meth:`manifest`, :meth:`vacuum` and
+    # :meth:`commit_append` read it directly.
 
     def _manifest_path(self, version: int) -> Path:
         return self.path / f"v{version}.json"
@@ -708,7 +687,7 @@ class VersionedTable:
                 "path": rel,
                 "kb": kb,
                 "n_files": len(fl),
-                "bytes": sum(self._file_bytes(f) for f in fl),
+                "bytes": sum(f["bytes"] for f in fl),
                 "rows": rows,
             }
             if nb is not None:
@@ -739,10 +718,8 @@ class VersionedTable:
     @staticmethod
     def _written_by(path: str, version: int) -> bool:
         """True when a manifest-relative file path was written by a
-        commit attempt of ``version`` (``data/c{v}-{token}/...``; the
-        pre-token layout ``data/c{v}/...`` still matches for tables
-        written before round 12)."""
-        return path.startswith((f"data/c{version}/", f"data/c{version}-"))
+        commit attempt of ``version`` (``data/c{v}-{token}/...``)."""
+        return path.startswith(f"data/c{version}-")
 
     def _write_data(
         self,
@@ -837,12 +814,6 @@ class VersionedTable:
                     entry["khs"] = khs
             files.append(entry)
         return files
-
-    def _file_bytes(self, f: dict) -> int:
-        b = f.get("bytes")
-        if b is None:  # manifest predating size recording
-            b = (self.path / f["path"]).stat().st_size
-        return b
 
     def _read_files(
         self, spark: SparkSession, files: list[dict], schema: StructType
@@ -1050,14 +1021,14 @@ class VersionedTable:
             .unionByName(delta.limit(0), allowMissingColumns=True)
             .schema
         )
-        # sharded manifests carry EVERY previous shard entry verbatim
+        # bucketed tables carry EVERY previous shard entry verbatim
         # (zero metadata loads — the new strays form their own shard
         # entry, folded into one at the next compaction, exactly like
-        # the stray data files themselves); legacy flat manifests
-        # append to the inline list
+        # the stray data files themselves); unbucketed tables append
+        # to the inline list
         self._write_manifest(
             nxt,
-            ([] if "shards" in man else man["files"]) + new_files,
+            ([] if self.is_bucketed else man["files"]) + new_files,
             merged_schema,
             batch_id,
             # CDF for a pure append IS the delta: no second copy, the
@@ -1133,11 +1104,10 @@ class VersionedTable:
         # same xxhash64 values); only the bulk over-cap regime pays one
         # extra bounded groupBy per old spec (at most one in practice).
         by_nb: dict[int, set] = {nb: tb}
-        spec_src = man["shards"] if "shards" in man else man["files"]
         for spec in sorted({
-            self._file_nb(f, nb)
-            for f in spec_src
-            if f.get("kb") is not None
+            self._file_nb(s, nb)
+            for s in man["shards"]
+            if s.get("kb") is not None
         } - {None, nb}):
             if hashes is not None:
                 by_nb[spec] = {h % spec for h in hashes}
@@ -1148,7 +1118,46 @@ class VersionedTable:
                     .agg(F.count(F.lit(1)).alias("c"))
                     .collect()
                 }
-        return TouchedInfo(hashes, n_rows, tb, nb, by_nb)
+        return TouchedInfo(hashes, n_rows, nb, by_nb)
+
+    def _touched_files(
+        self, man: dict, info: TouchedInfo
+    ) -> tuple[list[dict], list[dict], list[dict], list[dict]]:
+        """THE selection of the files a keyed batch touches, shared by
+        :meth:`commit_keyed` (which rewrites them) and
+        :meth:`read_buckets` (which reads them). Returns
+        ``(carry_shards, touched, strays, carried)``:
+
+        * a shard whose bucket is untouched under its own spec is
+          carried as a reference, never parsed — the selection's
+          metadata cost is O(touched shards);
+        * a bucketed file of a loaded shard is ``touched`` when its
+          bucket is touched AND :func:`_khr_hits` says it may hold a
+          touched key, else ``carried``;
+        * a kb=None stray (an append delta not yet compacted into
+          buckets) may hold ANY key, so it is tested on the hash alone
+          and lands in ``strays`` or ``carried``;
+        * a spec missing from ``info.buckets`` is not bucket-pruned."""
+        nb = self._n_buckets_at(man)
+        carry_shards, loaded = [], []
+        for s in man["shards"]:
+            tb = info.buckets.get(self._file_nb(s, nb))
+            if s.get("kb") is None or tb is None or s["kb"] in tb:
+                loaded.extend(self._load_shard(s))
+            else:
+                carry_shards.append(s)
+        file_nbs = [self._file_nb(f, nb) for f in loaded]
+        hits = _khr_hits(loaded, info.hashes, file_nbs)
+        touched, strays, carried = [], [], []
+        for f, fnb, hit in zip(loaded, file_nbs, hits):
+            tb = info.buckets.get(fnb)
+            if f["kb"] is None:
+                (strays if hit else carried).append(f)
+            elif hit and (tb is None or f["kb"] in tb):
+                touched.append(f)
+            else:
+                carried.append(f)
+        return carry_shards, touched, strays, carried
 
     def commit_keyed(
         self,
@@ -1246,21 +1255,8 @@ class VersionedTable:
             # pass it in — one driver job per batch, not one per call.
             if info is None or info.n_buckets != nb:
                 info = self.touched_info(touched_keys, _man=man)
-            hashes, tb = info.hashes, info.buckets
+            hashes = info.hashes
             small = info.n_rows is not None and info.n_rows <= bcap
-
-            def _tb_for(spec: int | None) -> set | None:
-                """Touched buckets under ``spec`` (files on an old
-                spec mid-migration): from the info's per-spec sets,
-                else derived from the hashes, else None = unknown →
-                the caller must not bucket-prune that file."""
-                if spec == nb:
-                    return tb
-                if info.buckets_by_nb and spec in info.buckets_by_nb:
-                    return info.buckets_by_nb[spec]
-                if hashes is not None and spec:
-                    return {h % spec for h in hashes}
-                return None
             if hashes is not None and not hashes:
                 # empty touched set: a logical no-op (empty micro-
                 # batch). Minting a version would re-write strays
@@ -1276,47 +1272,13 @@ class VersionedTable:
                         "covered by touched_keys)"
                     )
                 return cur
-            # SELECTIVE metadata load (sharded manifests): only the
-            # shards whose bucket can hold a touched key — plus every
-            # stray shard, whose files khr-prune individually — are
-            # read; untouched shards carry into the new manifest as
-            # references with ZERO metadata IO, so a keyed commit's
-            # metadata cost is O(touched shards), not O(live files)
-            if "shards" in man:
-                carry_shards, loaded = [], []
-                for s in man["shards"]:
-                    snb = self._file_nb(s, nb)
-                    stb = _tb_for(snb)
-                    if s.get("kb") is None or stb is None or s["kb"] in stb:
-                        loaded.extend(self._load_shard(s))
-                    else:
-                        carry_shards.append(s)
-            else:
-                loaded = man["files"]
-            bucket_files = [f for f in loaded if f["kb"] is not None]
-            file_nbs = [self._file_nb(f, nb) for f in bucket_files]
-            hits = _khr_hits(bucket_files, hashes, file_nbs)
-            touched_files = []
-            carried = []
-            for f, fnb, hit in zip(bucket_files, file_nbs, hits):
-                ftb = _tb_for(fnb)
-                if hit and (ftb is None or f["kb"] in ftb):
-                    touched_files.append(f)
-                else:
-                    carried.append(f)
-            # kb=None strays (commit_append deltas not yet compacted
-            # into buckets) may hold ANY key, so they are read unless
-            # their recorded khr range proves otherwise; surviving
-            # touched strays are re-written as strays — re-bucketing a
-            # small scattered delta would pay one parquet file's
-            # overhead per bucket it grazes. Compaction folds strays
-            # into buckets for real.
-            all_strays = [f for f in loaded if f["kb"] is None]
-            s_hits = _khr_hits(all_strays, hashes, [None] * len(all_strays))
-            stray_files = [f for f, hit in zip(all_strays, s_hits) if hit]
-            carried += [
-                f for f, hit in zip(all_strays, s_hits) if not hit
-            ]
+            # surviving touched strays are re-written as strays —
+            # re-bucketing a small scattered delta would pay one
+            # parquet file's overhead per bucket it grazes; compaction
+            # folds strays into buckets for real
+            carry_shards, touched_files, stray_files, carried = (
+                self._touched_files(man, info)
+            )
             # size the rewrite's hash-range sub-split from the touched
             # files' recorded rows (replacement rows self-correct next
             # commit: an oversized file's own recorded rows drive a
@@ -1654,55 +1616,22 @@ class VersionedTable:
         *,
         info: TouchedInfo | None = None,
     ) -> DataFrame:
-        """The rows of every FILE that could contain a key from
-        ``keys_df`` — bucket match plus manifest ``khr`` hash-range
-        overlap, the same pruning :meth:`commit_keyed` applies (a
-        SUPERSET of the keys' rows — same-range neighbours and
-        unpruned append strays come along; callers semi-join to
-        narrow). This is the delta-bounded read half of a keyed merge:
-        untouched files are never scanned. Unbucketed tables return
+        """The rows of exactly the files :meth:`commit_keyed` would
+        rewrite for ``keys_df`` — the touched files and strays of the
+        shared selection ``_touched_files`` (bucket match plus manifest
+        ``khr``/``khs`` hash test). A SUPERSET of the keys' rows:
+        same-range neighbours and unpruned append strays come along,
+        so callers semi-join to narrow. This is the delta-bounded read
+        half of a keyed merge: untouched files are never scanned, and
+        untouched shards are never parsed. Unbucketed tables return
         the full snapshot."""
         if not self.is_bucketed:
             return self.read(spark)
         man = self._manifest_lite()
-        nb = self._n_buckets_at(man)
-        if info is None or info.n_buckets != nb:
+        if info is None or info.n_buckets != self._n_buckets_at(man):
             info = self.touched_info(keys_df, _man=man)
-        hashes, tb = info.hashes, info.buckets
-
-        def _tb_for(spec: int | None) -> set | None:
-            # same per-spec bucket sets commit_keyed prunes with: a
-            # lazy rebucket leaves files on their old spec until
-            # migrated; unknown spec → no bucket pruning for that file
-            if spec == nb:
-                return tb
-            if info.buckets_by_nb and spec in info.buckets_by_nb:
-                return info.buckets_by_nb[spec]
-            if hashes is not None and spec:
-                return {h % spec for h in hashes}
-            return None
-
-        if "shards" in man:
-            # selective metadata: untouched-bucket shards are never
-            # even parsed — the read's metadata cost matches its data
-            # cost, O(touched shards)
-            files = []
-            for s in man["shards"]:
-                stb = _tb_for(self._file_nb(s, nb))
-                if s.get("kb") is None or stb is None or s["kb"] in stb:
-                    files.extend(self._load_shard(s))
-        else:
-            files = man["files"]
-        file_nbs = [self._file_nb(f, nb) for f in files]
-        hits = _khr_hits(files, hashes, file_nbs)
-        picked = []
-        for f, fnb, hit in zip(files, file_nbs, hits):
-            if not hit:
-                continue
-            ftb = _tb_for(fnb)
-            if f["kb"] is None or ftb is None or f["kb"] in ftb:
-                picked.append(f)
-        return self._read_files(spark, picked, self._schema_of(man))
+        _, touched, strays, _ = self._touched_files(man, info)
+        return self._read_files(spark, touched + strays, self._schema_of(man))
 
     def versions(self) -> list[int]:
         return sorted(
@@ -2021,45 +1950,25 @@ class VersionedTable:
         old_nb = self._n_buckets_at(man)
         if old_nb == n_buckets and self.migration(cur) is None:
             return cur
+        # TRULY metadata-only: re-tag the shard ENTRIES (the spec tag
+        # lives there, injected per file on load) — no shard file is
+        # read or written; the small manifest is the only IO regardless
+        # of table size
+        carry = []
+        for s in man["shards"]:
+            s = dict(s)
+            snb = self._file_nb(s, old_nb)
+            if snb is not None and snb != n_buckets:
+                s["nb"] = snb  # pin the spec this shard's kb is under
+            else:
+                s.pop("nb", None)  # stray / already on target
+            carry.append(s)
         nxt = cur + 1
-        if "shards" in man:
-            # TRULY metadata-only: re-tag the shard ENTRIES (the spec
-            # tag lives there, injected per file on load) — no shard
-            # file is read or written; the small manifest is the only
-            # IO regardless of table size
-            carry = []
-            for s in man["shards"]:
-                s = dict(s)
-                snb = (
-                    (s.get("nb") or old_nb)
-                    if s.get("kb") is not None
-                    else None
-                )
-                if snb is not None and snb != n_buckets:
-                    s["nb"] = snb  # pin the spec this shard's kb is under
-                else:
-                    s.pop("nb", None)  # stray / already on target
-                carry.append(s)
-            self._write_manifest(
-                nxt, [], self._schema_of(man), self.last_applied_batch(),
-                cdf={"mode": "empty"} if self.has_change_feed else None,
-                n_buckets=n_buckets, expect=cur, carry_shards=carry,
-            )
-        else:  # legacy flat manifest: per-file tags
-            files = []
-            for f in man["files"]:
-                fnb = self._file_nb(f, old_nb)
-                f = dict(f)
-                if fnb is not None and fnb != n_buckets:
-                    f["nb"] = fnb
-                elif fnb == n_buckets:
-                    f.pop("nb", None)
-                files.append(f)
-            self._write_manifest(
-                nxt, files, self._schema_of(man), self.last_applied_batch(),
-                cdf={"mode": "empty"} if self.has_change_feed else None,
-                n_buckets=n_buckets, expect=cur,
-            )
+        self._write_manifest(
+            nxt, [], self._schema_of(man), self.last_applied_batch(),
+            cdf={"mode": "empty"} if self.has_change_feed else None,
+            n_buckets=n_buckets, expect=cur, carry_shards=carry,
+        )
         self._swap_pointer(nxt)
         return nxt
 
@@ -2068,26 +1977,18 @@ class VersionedTable:
         bucketed file is on the manifest's spec, else ``{"to": target,
         "pending_files": n, "pending_buckets": {old_spec: [bucket
         ids]}}`` — what remains for :meth:`rebucket_step` to move.
-        Derived from the spec tags (shard entries on sharded
-        manifests — O(shard entries), zero shard loads; per-file tags
-        on legacy flat ones), never stored separately, so it cannot
-        drift from the files it describes."""
+        Derived from the shard entries' spec tags — O(shard entries),
+        zero shard loads; an unbucketed table has none — never stored
+        separately, so it cannot drift from the files it describes."""
         man = self._manifest_lite(version)
         nb = self._n_buckets_at(man)
         pend: dict[int, set] = {}
         n = 0
-        if "shards" in man:
-            for s in man["shards"]:
-                snb = self._file_nb(s, nb)
-                if snb is not None and snb != nb:
-                    pend.setdefault(snb, set()).add(s["kb"])
-                    n += s["n_files"]
-        else:
-            for f in man["files"]:
-                fnb = self._file_nb(f, nb)
-                if fnb is not None and fnb != nb:
-                    pend.setdefault(fnb, set()).add(f["kb"])
-                    n += 1
+        for s in man.get("shards", []):
+            snb = self._file_nb(s, nb)
+            if snb is not None and snb != nb:
+                pend.setdefault(snb, set()).add(s["kb"])
+                n += s["n_files"]
         if not pend:
             return None
         return {
@@ -2133,35 +2034,21 @@ class VersionedTable:
                 for b in bs
             )[:max_buckets]
         )
-        move, carried, carry_shards = [], [], None
+        move, carry_shards = [], []
         rows_by_spec: dict[int, int | None] = {}
-
-        def _tally(spec: int, r: int | None) -> None:
-            have = rows_by_spec.get(spec, 0)
-            rows_by_spec[spec] = (
-                None if (have is None or r is None) else have + r
-            )
-
-        if "shards" in man:
-            # selective: load ONLY the chosen chunks' shards; every
-            # other shard is carried by reference — step metadata IO
-            # is O(chunk), matching the step's data IO
-            carry_shards = []
-            for s in man["shards"]:
-                snb = self._file_nb(s, nb)
-                if snb is not None and snb != nb and (snb, s["kb"]) in chosen:
-                    move.extend(self._load_shard(s))
-                    _tally(snb, s.get("rows"))
-                else:
-                    carry_shards.append(s)
-        else:
-            for f in man["files"]:
-                fnb = self._file_nb(f, nb)
-                if fnb is not None and fnb != nb and (fnb, f["kb"]) in chosen:
-                    move.append(f)
-                    _tally(fnb, f.get("rows"))
-                else:
-                    carried.append(f)
+        # selective: load ONLY the chosen chunks' shards; every other
+        # shard is carried by reference — step metadata IO is
+        # O(chunk), matching the step's data IO
+        for s in man["shards"]:
+            snb = self._file_nb(s, nb)
+            if snb is not None and snb != nb and (snb, s["kb"]) in chosen:
+                move.extend(self._load_shard(s))
+                have, r = rows_by_spec.get(snb, 0), s.get("rows")
+                rows_by_spec[snb] = (
+                    None if (have is None or r is None) else have + r
+                )
+            else:
+                carry_shards.append(s)
         nxt = cur + 1
         schema = self._schema_of(man)
         # an old-spec bucket scatters only into the new buckets sharing
@@ -2191,7 +2078,7 @@ class VersionedTable:
         )
         self._write_manifest(
             nxt,
-            carried + new_files,
+            new_files,
             schema,
             self.last_applied_batch(),
             cdf={"mode": "empty"} if self.has_change_feed else None,
@@ -2213,7 +2100,7 @@ class VersionedTable:
         tests/probes measure."""
         v = self.current_version() if version is None else version
         return sum(
-            self._file_bytes(f)
+            f["bytes"]
             for f in self.manifest(v)["files"]
             if self._written_by(f["path"], v)
         )
@@ -2240,9 +2127,9 @@ class VersionedTable:
                 "n_files": len(files),
                 "n_stray_files": sum(1 for f in files if f["kb"] is None)
                 if self.is_bucketed else 0,
-                "bytes_total": sum(self._file_bytes(f) for f in files),
+                "bytes_total": sum(f["bytes"] for f in files),
                 "bytes_added": sum(
-                    self._file_bytes(f)
+                    f["bytes"]
                     for f in files
                     if self._written_by(f["path"], v)
                 ),
@@ -2263,7 +2150,7 @@ class VersionedTable:
         if not self.is_bucketed:
             return 0
         return sum(
-            self._file_bytes(f)
+            f["bytes"]
             for f in self.manifest(version)["files"]
             if f["kb"] is None
         )

@@ -586,6 +586,42 @@ def _touched_setup(table, touched: DataFrame):
     return None, F.broadcast(touched)
 
 
+def _keyed_apply(
+    table, frame: DataFrame, keys: list[str], build, batch_id=None
+) -> None:
+    """The keyed micro-batch body of the MERGE/SCD2/aggregate apply
+    fns: ``frame``'s distinct keys → one TouchedInfo → the stored rows
+    of the files the commit will rewrite (``read_buckets``, semi-joined
+    to the keys) → ``build(touched_rows)``, the keys' replacement →
+    ``commit_keyed``. An empty batch mints no version."""
+    touched = frame.select(*keys).distinct()
+    ti, tfr = _touched_setup(table, touched)
+    if ti is not None and ti.n_rows == 0:
+        return  # empty micro-batch: logical no-op, mint no version
+    base = table.read_buckets(frame.sparkSession, touched, info=ti)
+    touched_rows = base.join(tfr, on=keys, how="left_semi")
+    table.commit_keyed(
+        build(touched_rows), touched, batch_id=batch_id, info=ti
+    )
+
+
+def _drain(sdf: DataFrame, table, apply_batch, blocking: bool = True):
+    """Run ``apply_batch`` over every available micro-batch of ``sdf``
+    (``foreachBatch``, checkpointed under the table, ``availableNow``)
+    and return the table's final state — or, with ``blocking=False``,
+    the started :class:`StreamingQuery` for the caller to await."""
+    q = (
+        sdf.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", str(table.path / "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not blocking:
+        return q
+    q.awaitTermination()
+    return table.read(sdf.sparkSession)
+
+
 def stream_merge_apply(
     sdf: DataFrame,
     table,
@@ -614,38 +650,16 @@ def stream_merge_apply(
     from kaj_query_engine_spark.operators.maintenance import merge_upsert
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        touched = batch_df.select(*keys).distinct()
-        ti, tfr = _touched_setup(table, touched)
-        if ti is not None and ti.n_rows == 0:
-            return  # empty micro-batch: logical no-op, mint no version
-        base = table.read_buckets(spark, touched, info=ti)
-        touched_rows = base.join(tfr, on=keys, how="left_semi")
-        merged = merge_upsert(
-            touched_rows,
-            batch_df,
-            keys,
-            delete_condition=delete_condition,
-            # evolution composes with versioning for free: the first
-            # drifted batch widens the manifest schema; untouched
-            # buckets' files read the new column as NULL without
-            # being rewritten (same as Delta's mergeSchema on a
-            # streaming MERGE sink)
+        # evolution composes with versioning for free: the first
+        # drifted batch widens the manifest schema; untouched buckets'
+        # files read the new column as NULL without being rewritten
+        # (same as Delta's mergeSchema on a streaming MERGE sink)
+        _keyed_apply(table, batch_df, keys, lambda rows: merge_upsert(
+            rows, batch_df, keys, delete_condition=delete_condition,
             schema_evolution=schema_evolution,
-        )
-        table.commit_keyed(merged, touched, info=ti)
+        ))
 
-    q = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option(
-            "checkpointLocation",
-            str(table.path / "_checkpoint"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return table.read(sdf.sparkSession)
+    return _drain(sdf, table, apply_batch)
 
 
 def stream_scd2_apply(
@@ -680,34 +694,14 @@ def stream_scd2_apply(
     from kaj_query_engine_spark.operators.maintenance import scd2_merge_batch
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        touched = batch_df.select(key).distinct()
-        ti, tfr = _touched_setup(table, touched)
-        if ti is not None and ti.n_rows == 0:
-            return  # empty micro-batch: logical no-op, mint no version
-        base = table.read_buckets(spark, touched, info=ti)
-        touched_rows = base.join(tfr, on=[key], how="left_semi")
         # dim restricted to touched keys → scd2_merge_batch's "kept"
         # arm is empty by construction; the whole result is the
         # replacement for exactly the touched keys
-        merged = scd2_merge_batch(
-            touched_rows,
-            batch_df,
-            key,
-            ts_col,
-            state_col,
-            tiebreak=tiebreak,
-        )
-        table.commit_keyed(merged, touched, info=ti)
+        _keyed_apply(table, batch_df, [key], lambda rows: scd2_merge_batch(
+            rows, batch_df, key, ts_col, state_col, tiebreak=tiebreak
+        ))
 
-    q = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(table.path / "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return table.read(sdf.sparkSession)
+    return _drain(sdf, table, apply_batch)
 
 
 def stream_agg_state_apply(
@@ -744,28 +738,17 @@ def stream_agg_state_apply(
     from kaj_query_engine_spark.operators.maintenance import merge_agg_state
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         last = table.last_applied_batch()
         if last is not None and batch_id <= last:
             return  # at-least-once re-delivery of an applied batch
         bs = batch_state_of(batch_df)
-        touched = bs.select(*keys).distinct()
-        ti, tfr = _touched_setup(table, touched)
-        if ti is not None and ti.n_rows == 0:
-            return  # empty micro-batch: logical no-op, mint no version
-        base = table.read_buckets(spark, touched, info=ti)
-        touched_state = base.join(tfr, on=keys, how="left_semi")
-        merged = merge_agg_state(touched_state, bs, keys, merge_exprs)
-        table.commit_keyed(merged, touched, batch_id=batch_id, info=ti)
+        _keyed_apply(
+            table, bs, keys,
+            lambda rows: merge_agg_state(rows, bs, keys, merge_exprs),
+            batch_id=batch_id,
+        )
 
-    q = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(table.path / "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return table.read(sdf.sparkSession)
+    return _drain(sdf, table, apply_batch)
 
 
 def stream_join_view_apply(
@@ -810,16 +793,7 @@ def stream_join_view_apply(
         delta_view = static_left.join(batch_df, on=on)
         table.commit_append(delta_view, batch_id=batch_id)
 
-    q = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(table.path / "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not blocking:
-        return q
-    q.awaitTermination()
-    return table.read(sdf.sparkSession)
+    return _drain(sdf, table, apply_batch, blocking)
 
 
 def stream_join_view_cdc_apply(
@@ -880,13 +854,4 @@ def stream_join_view_cdc_apply(
         )
         table.commit_keyed(replacement, touched, batch_id=batch_id, info=ti)
 
-    q = (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", str(table.path / "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not blocking:
-        return q
-    q.awaitTermination()
-    return table.read(sdf.sparkSession)
+    return _drain(sdf, table, apply_batch, blocking)

@@ -581,30 +581,21 @@ _SJV_CDC_ORACLE = (
 
 def _cdc_landing(spark, sf_dir: str) -> str:
     """Write-once compacted-CDC landing dir for the customer dimension
-    (same staleness-token pattern as q81's): three single-file batches
+    (``scale._mtime_landing``, like q81's): three single-file batches
     with ascending mtimes — segment updates, deletes, late inserts."""
-    import os
-    import shutil
-    from pathlib import Path
-
     from kaj_query_engine_spark.workload.scale import (
         _SCRATCH,
-        _layout_current,
-        _layout_token,
-        _stamp_layout,
+        _mtime_landing,
         _tag,
     )
 
-    src = f"{sf_dir}/customer.parquet"
-    dst = _SCRATCH / _tag(sf_dir) / "cdc_landing"
-    token = _layout_token(src, "cdc:v1")
-    if not _layout_current(token, str(dst)):
+    def batches():
         cust = t(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("o_custkey"),
             F.col("c_mktsegment").alias("seg"),
         )
         ck = F.col("o_custkey")
-        batches = [
+        return [
             cust.filter((ck % 5 != 0) & (ck % 6 == 0)).select(
                 F.lit("U").alias("op"), "o_custkey",
                 F.lit("MOVED").alias("seg"),
@@ -617,19 +608,13 @@ def _cdc_landing(spark, sf_dir: str) -> str:
                 F.lit("I").alias("op"), "o_custkey", "seg"
             ),
         ]
-        shutil.rmtree(dst, ignore_errors=True)
-        dst.mkdir(parents=True, exist_ok=True)
-        base = 1_700_000_000
-        for i, b in enumerate(batches):
-            tmp = str(dst / f"_tmp{i}")
-            b.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(Path(tmp).glob("part-*.parquet"))
-            tgt = dst / f"part-b{i:03d}.parquet"
-            shutil.move(str(part), str(tgt))
-            shutil.rmtree(tmp)
-            os.utime(tgt, (base + 60 * i, base + 60 * i))
-        _stamp_layout(token, str(dst))
-    return str(dst)
+
+    return _mtime_landing(
+        f"{sf_dir}/customer.parquet",
+        _SCRATCH / _tag(sf_dir) / "cdc_landing",
+        "cdc:v1",
+        batches,
+    )
 
 
 @register(

@@ -73,14 +73,21 @@ def register(
 # pile up in the window.
 #
 # Pins of this change (derive_fine output; the rotation pytest
-# enforces the superset): the dialect queries, whose lowering became
-# one parameterized SQL statement over ``Catalog.view`` temp views.
+# enforces the superset): the VersionedTable users (its keyed-file
+# selection became one shared selector), the streaming keyed-apply
+# family, the two mtime-ordered landing dirs, the semantic couples of
+# versioned.py, and q12 through the session docstring.
 _CHANGED_THIS_ROUND = [
-    "q01_scan",
-    "q02_select_distinct_orderby",
-    "q03_agg_witness",
-    "q07_join4",
-    "q10_theta_join",
+    "q12_semantic_dedup",
+    "q19_bucket_evolution",
+    "q33_table_time_travel",
+    "q55_merge_upsert",
+    "q66_merge_evolve",
+    "q81_stream_late_data",
+    "q85_stream_merge",
+    "q86_stream_scd2",
+    "q87_stream_agg_state",
+    "q89_stream_join_view",
 ]
 
 # Stalest-first (RULE 2): the 31 queries OUTSIDE round 15's 50-query

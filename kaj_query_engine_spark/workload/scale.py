@@ -70,6 +70,36 @@ def _stamp_layout(token: _LayoutToken, dst: str) -> None:
     (Path(dst) / "_src_token").write_text(token.text)
 
 
+def _mtime_landing(src: str, dst: Path, params: str, batches) -> str:
+    """A landing dir of single-file parquet batches
+    ``part-b000.parquet``, ``part-b001.parquet``, … that a file stream
+    under ``maxFilesPerTrigger=1`` replays one micro-batch each, in
+    mtime order. ``batches()`` returns the batch DataFrames; they are
+    written once per source generation (``_layout_current``'s token
+    rule). The token does not see mtimes, and a copy or a ``touch``
+    resets them, so the ascending stamps are re-applied on EVERY call
+    — otherwise the batches would replay in whatever order the reset
+    left."""
+    import os
+    import shutil
+
+    token = _layout_token(src, params)
+    if not _layout_current(token, str(dst)):
+        shutil.rmtree(dst, ignore_errors=True)
+        dst.mkdir(parents=True, exist_ok=True)
+        for i, b in enumerate(batches()):
+            tmp = str(dst / f"_tmp{i}")
+            b.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = next(Path(tmp).glob("part-*.parquet"))
+            shutil.move(str(part), str(dst / f"part-b{i:03d}.parquet"))
+            shutil.rmtree(tmp)
+        _stamp_layout(token, str(dst))
+    base = 1_700_000_000
+    for i, p in enumerate(sorted(dst.glob("part-b*.parquet"))):
+        os.utime(p, (base + 60 * i, base + 60 * i))
+    return str(dst)
+
+
 def _bucketed(spark, sf_dir, src_name, table, cols, bucket_col) -> None:
     """Ensure a bucketed catalog table over ``<sf_dir>/<src_name>`` —
     written ONCE per fixture generation (same staleness-token rule as

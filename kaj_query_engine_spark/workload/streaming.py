@@ -272,49 +272,34 @@ _LATE_STRAG = "2024-01-08 00:00:00"
 
 
 def _late_landing(spark, sf_dir: str) -> str:
-    """Write-once landing dir (same staleness-token rule as the
-    materialized layouts): three single-file parquet batches with
-    ascending mtimes, one micro-batch each under maxFilesPerTrigger."""
-    import os
-    import shutil
-    from pathlib import Path
-
+    """Write-once landing dir (``scale._mtime_landing``): three
+    single-file parquet batches with ascending mtimes, one micro-batch
+    each under maxFilesPerTrigger."""
     from kaj_query_engine_spark.workload.scale import (
         _SCRATCH,
-        _layout_current,
-        _layout_token,
-        _stamp_layout,
+        _mtime_landing,
         _tag,
     )
 
-    src = f"{sf_dir}/events.parquet"
-    dst = _SCRATCH / _tag(sf_dir) / "late_landing"
-    token = _layout_token(src, "late:v1")
-    if not _layout_current(token, str(dst)):
+    def batches():
         ev = t(spark, sf_dir, "events")
         c1 = F.lit(_LATE_CUT1).cast("timestamp")
         c2 = F.lit(_LATE_CUT2).cast("timestamp")
         strag = (F.col("event_id") % 10 == 0) & (
             F.col("ts") < F.lit(_LATE_STRAG).cast("timestamp")
         )
-        batches = [
+        return [
             ev.filter((F.col("ts") < c1) & ~strag),
             ev.filter((F.col("ts") >= c1) & (F.col("ts") < c2)),
             ev.filter((F.col("ts") >= c2) | strag),
         ]
-        shutil.rmtree(dst, ignore_errors=True)
-        dst.mkdir(parents=True, exist_ok=True)
-        base = 1_700_000_000
-        for i, b in enumerate(batches):
-            tmp = str(dst / f"_tmp{i}")
-            b.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(Path(tmp).glob("part-*.parquet"))
-            tgt = dst / f"part-b{i:03d}.parquet"
-            shutil.move(str(part), str(tgt))
-            shutil.rmtree(tmp)
-            os.utime(tgt, (base + 60 * i, base + 60 * i))
-        _stamp_layout(token, str(dst))
-    return str(dst)
+
+    return _mtime_landing(
+        f"{sf_dir}/events.parquet",
+        _SCRATCH / _tag(sf_dir) / "late_landing",
+        "late:v1",
+        batches,
+    )
 
 
 @register(

@@ -89,3 +89,42 @@ def test_bucketed_join_has_no_exchange(spark):
     assert "SortMergeJoin" in plan
     assert "Exchange hashpartitioning" not in plan
     assert joined.count() == c.join(o, c.c_custkey == o.o_custkey).count()
+
+def test_mtime_landing_replays_in_order_after_mtime_reset(spark, tmp_path):
+    """A landing dir's file-stream order under maxFilesPerTrigger=1 is
+    its files' mtimes, which a copy or a touch resets while the layout
+    token still matches: _mtime_landing re-stamps them on every call,
+    so the three batches still replay in order, without a rewrite."""
+    import os
+
+    from kaj_query_engine_spark.workload.scale import _mtime_landing
+
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"x")  # only its stat() feeds the token
+    dst = tmp_path / "landing"
+    built = []
+
+    def batches():
+        built.append(1)
+        return [spark.range(10 * i, 10 * i + 3) for i in range(3)]
+
+    _mtime_landing(str(src), dst, "t:v1", batches)
+    # reverse the order, as a reset that lists files backwards would
+    for i, p in enumerate(sorted(dst.glob("part-b*.parquet"), reverse=True)):
+        os.utime(p, (1_800_000_000 + i, 1_800_000_000 + i))
+    landing = _mtime_landing(str(src), dst, "t:v1", batches)
+    assert built == [1]
+    order = []
+    q = (
+        spark.readStream.schema("id LONG")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(landing)
+        .writeStream.foreachBatch(
+            lambda df, _bid: order.append(sorted(r.id for r in df.collect()))
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert order == [[0, 1, 2], [10, 11, 12], [20, 21, 22]]

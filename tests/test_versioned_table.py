@@ -7,6 +7,7 @@ through the batch merge_upsert."""
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -1823,7 +1824,7 @@ def test_history_surfaces_keyed_pruning_mode(spark, tmp_path):
     tbl.commit_keyed(upd, upd.select("k"))  # small: file pruning
     # force the bulk regime: an info with no hash list (past the cap)
     upd2 = df_(spark, [(8, "Y")])
-    info = TouchedInfo(None, 1, {tbl.touched_info(upd2.select('k')).buckets.pop()}, 4)
+    info = TouchedInfo(None, 1, 4, {4: {tbl.touched_info(upd2.select('k')).buckets[4].pop()}})
     tbl.commit_keyed(upd2, upd2.select("k"), info=info)
     hist = {h["version"]: h for h in tbl.history()}
     assert hist[0]["keyed"] is None
@@ -1843,7 +1844,7 @@ def test_history_surfaces_keyed_pruning_mode(spark, tmp_path):
 def test_bulk_regime_keyed_commit_mid_migration(spark, tmp_path):
     """The over-cap regime (no collected hash list) while the table is
     MIXED-SPEC: touched-bucket sets must be computed per spec by the
-    extra bounded groupBy (buckets_by_nb), file pruning degrades to
+    extra bounded groupBy (TouchedInfo.buckets), file pruning degrades to
     bucket granularity (recorded in history), and the data stays
     correct. Forced via a TouchedInfo with hashes=None rather than
     16k+ real keys."""
@@ -1860,7 +1861,7 @@ def test_bulk_regime_keyed_commit_mid_migration(spark, tmp_path):
     # touched_info computes per-spec sets; blank the hash list to
     # force the bulk path while keeping the per-spec bucket sets
     info = tbl.touched_info(tk)
-    assert set(info.buckets_by_nb) == {2, 8}
+    assert set(info.buckets) == {2, 8}
     # the real over-cap path (hashes=None) while STILL mixed-spec:
     # the per-spec bucket sets come from the extra bounded groupBy
     import kaj_query_engine_spark.sources.versioned as V
@@ -1869,12 +1870,11 @@ def test_bulk_regime_keyed_commit_mid_migration(spark, tmp_path):
         V._FILE_PRUNE_KEYS = 1  # force over-cap with a 3-key frame
         info2 = tbl.touched_info(tk)
         assert info2.hashes is None
-        assert set(info2.buckets_by_nb) == {2, 8}
-        assert info2.buckets_by_nb[2] and info2.buckets_by_nb[8]
+        assert set(info2.buckets) == {2, 8}
+        assert info2.buckets[2] and info2.buckets[8]
     finally:
         V._FILE_PRUNE_KEYS = old_cap
-    bulk = TouchedInfo(None, info.n_rows, info.buckets, info.n_buckets,
-                       info.buckets_by_nb)
+    bulk = TouchedInfo(None, info.n_rows, info.n_buckets, info.buckets)
     v = tbl.commit_keyed(upd, tk, info=bulk)
     for k, val in [(10, "U10"), (11, "U11"), (250, "U250")]:
         model[k] = val
@@ -1885,6 +1885,43 @@ def test_bulk_regime_keyed_commit_mid_migration(spark, tmp_path):
     rb = {r.k for r in tbl.read_buckets(spark, df_(spark, [(10, "x")]).select("k"),
                                         info=bulk).collect()}
     assert 10 in rb
+
+
+@pytest.mark.parametrize("regime", ["file", "bucket"])
+def test_read_buckets_reads_exactly_what_commit_keyed_rewrites(
+    spark, tmp_path, monkeypatch, regime
+):
+    """read_buckets and commit_keyed share ONE file selection: on a
+    mixed-spec table with strays, the files read_buckets scans for a
+    touched set are exactly the files commit_keyed drops from the
+    manifest for the same set — with file pruning, and in the over-cap
+    regime (no hash list: bucket pruning only)."""
+    from urllib.parse import urlparse
+
+    import kaj_query_engine_spark.sources.versioned as V
+
+    if regime == "bucket":
+        monkeypatch.setattr(V, "_FILE_PRUNE_KEYS", 0)
+    tbl = VersionedTable(tmp_path / "t")
+    tbl.init(df_(spark, [(i, f"v{i}") for i in range(200)]),
+             bucket_keys=["k"], n_buckets=2)
+    tbl.commit_append(df_(spark, [(1000 + i, "s") for i in range(4)]))
+    tbl.start_rebucket(8)
+    tbl.rebucket_step(spark)
+    assert tbl.migration() is not None  # spec-2 and spec-8 files
+    root = tbl.path.resolve()
+    for keys in ([7], [10, 150, 1002]):
+        tk = spark.createDataFrame([(k,) for k in keys], "k long")
+        before = {f["path"] for f in tbl.manifest()["files"]}
+        read = {
+            str(Path(urlparse(u).path).relative_to(root))
+            for u in tbl.read_buckets(spark, tk).inputFiles()
+        }
+        v = tbl.commit_keyed(df_(spark, [(k, "X") for k in keys]), tk)
+        man = tbl.manifest(v)
+        assert man["keyed"]["pruning"] == regime
+        dropped = before - {f["path"] for f in man["files"]}
+        assert read and read == dropped, keys
 
 
 # ---------------------------------------------------------------------
